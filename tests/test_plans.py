@@ -369,20 +369,66 @@ def test_pagerank_broadcast_only_joins(spark, sf_dir):
     assert "SortMergeJoin" not in plan
 
 
-def test_pagerank_driver_gate_matches_distributed_path(spark, sf_dir):
+def _events_dir(path, rows) -> str:
+    """Create ``path`` as a one-table sf dir holding ``events.parquet``
+    with ``rows`` of (event_id, minute, user_id, event_type)."""
+    import datetime as dt
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    t0 = dt.datetime(2024, 1, 1)
+    path.mkdir()
+    pq.write_table(
+        pa.table(
+            {
+                "event_id": pa.array([r[0] for r in rows], pa.int64()),
+                "ts": pa.array(
+                    [t0 + dt.timedelta(minutes=r[1]) for r in rows],
+                    pa.timestamp("us"),
+                ),
+                "user_id": pa.array([r[2] for r in rows], pa.int64()),
+                "event_type": pa.array([r[3] for r in rows], pa.string()),
+            }
+        ),
+        str(path / "events.parquet"),
+    )
+    return str(path)
+
+
+_PAGERANK_INPUTS = {
+    "empty": [],
+    "null_key": [
+        (1, 0, 1, "a"), (2, 1, 1, None), (3, 2, 1, "b"),
+        (4, 0, 2, None), (5, 1, 2, "a"), (6, 2, 2, "b"),
+    ],
+    "single_row": [(1, 0, 1, "a")],
+}
+
+
+def test_pagerank_driver_gate_matches_distributed_path(
+    spark, sf_dir, tmp_path
+):
     """The r12 driver-side iteration must emit exactly the distributed
-    BSP rounds' rows (same integer/double arithmetic, term for term)."""
+    BSP rounds' rows (same integer/double arithmetic, term for term), and
+    survive every input the distributed path survives: an empty events
+    table, NULL event types, a single row."""
     from transitdata_monitor_data_collector_spark.plans.monitoring import (
         _pagerank_body,
     )
 
-    gated = _pagerank_body(spark, sf_dir).collect()
-    dist = _pagerank_body(spark, sf_dir, driver_max_edges=0).collect()
-    assert [tuple(r) for r in gated] == [tuple(r) for r in dist]
-    assert [f.dataType for f in _pagerank_body(spark, sf_dir).schema.fields] == [
-        f.dataType
-        for f in _pagerank_body(spark, sf_dir, driver_max_edges=0).schema.fields
-    ]
+    dirs = {"sf": sf_dir}
+    for case, rows in _PAGERANK_INPUTS.items():
+        dirs[case] = _events_dir(tmp_path / case, rows)
+    for case, d in dirs.items():
+        gated = _pagerank_body(spark, d)
+        dist = _pagerank_body(spark, d, driver_max_edges=0)
+        assert [tuple(r) for r in gated.collect()] == [
+            tuple(r) for r in dist.collect()
+        ], case
+        assert [f.dataType for f in gated.schema.fields] == [
+            f.dataType for f in dist.schema.fields
+        ], case
 
 
 def test_shuffle_hash_hint_respected(spark, sf_dir):

@@ -66,15 +66,24 @@ class CollectorApp:
         }
         run_id = uuid.uuid4().hex[:8]
 
+        # each stateful query starts at the engine's one state-width rule
+        def start_query(writer):
+            return jobs.start_stateful(
+                self.spark,
+                writer.option(
+                    "checkpointLocation", tempfile.mkdtemp(prefix="ckpt_app_")
+                ),
+            )
+
         # counter job -> in-memory serving table for /metrics
         self._counter_view = f"mqtt_counters_{run_id}"
         counters = jobs.cumulative_counter_job(self.message_stream, filters)
         self._queries.append(
-            counters.writeStream.format("memory")
-            .queryName(self._counter_view)
-            .outputMode("update")
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_app_"))
-            .start()
+            start_query(
+                counters.writeStream.format("memory")
+                .queryName(self._counter_view)
+                .outputMode("update")
+            )
         )
 
         # connection-state job -> mqtt_connected gauge + connection_lost
@@ -82,11 +91,11 @@ class CollectorApp:
         self._connection_view = f"mqtt_connection_{run_id}"
         conn = jobs.connection_state_job(self.message_stream)
         self._queries.append(
-            conn.writeStream.format("memory")
-            .queryName(self._connection_view)
-            .outputMode("update")
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_app_"))
-            .start()
+            start_query(
+                conn.writeStream.format("memory")
+                .queryName(self._connection_view)
+                .outputMode("update")
+            )
         )
 
         # rate job -> envelope sink (skipped when no sink is wired).
@@ -100,12 +109,10 @@ class CollectorApp:
         if self.envelope_sink is not None:
             rates = jobs.windowed_rate_job(self.message_stream, filters)
             self._queries.append(
-                rates.writeStream.foreachBatch(self.envelope_sink)
-                .outputMode("append")
-                .option(
-                    "checkpointLocation", tempfile.mkdtemp(prefix="ckpt_app_")
+                start_query(
+                    rates.writeStream.foreachBatch(self.envelope_sink)
+                    .outputMode("append")
                 )
-                .start()
             )
         # GTFS-RT scrape schedule (GtfsRtMetricsExporter.java:37-42):
         # fixed-rate micro-batch trigger at config.gtfsrt_poll_interval_s

@@ -53,11 +53,6 @@ def marker_hits_tokens(toks: Column, markers: list[str]) -> Column:
     ).cast("long")
 
 
-def marker_hits(text: Column, markers: list[str]) -> Column:
-    """How many tokens of ``text`` are in the marker list."""
-    return marker_hits_tokens(tokens(text), markers)
-
-
 def langid(text: Column) -> Column:
     """Greedy argmax over marker-hit scores, ties broken by LANG_PREFERENCE
     order. A real system would use character n-gram profiles; the operator
@@ -100,18 +95,10 @@ def punct_ratio(text: Column) -> Column:
     return F.when(n > 0, p.cast("double") / n).otherwise(F.lit(0.0))
 
 
-def stopword_ratio(text: Column) -> Column:
-    return stopword_ratio_tokens(tokens(text))
-
-
 def stopword_ratio_tokens(toks: Column) -> Column:
     tc = F.size(toks).cast("long")
     sw = marker_hits_tokens(toks, EN_STOPWORDS)
     return F.when(tc > 0, sw.cast("double") / tc).otherwise(F.lit(0.0))
-
-
-def mean_token_len(text: Column) -> Column:
-    return mean_token_len_tokens(tokens(text))
 
 
 def mean_token_len_tokens(toks: Column) -> Column:

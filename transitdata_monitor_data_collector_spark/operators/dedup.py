@@ -30,17 +30,13 @@ from transitdata_monitor_data_collector_spark.functions.text import (
 # far from int64 overflow (Spark 4 ANSI mode errors on overflow).
 _P = 2_147_483_647
 
-#: Process-wide default for ``dedup_exact_first`` (the r8 exact-duplicate
-#: collapse before the quadratic candidate/verify work). "auto" = decide
-#: per corpus via the distinct-content-ratio precheck below; True/False
-#: force it (the bench-attribution tool, tools/attrib_collapse.py, times
-#: the UNCHANGED registry builders under each forced shape).
-DEDUP_EXACT_FIRST_DEFAULT: bool | str = "auto"
-
+#: ``dedup_exact_first`` (the r8 exact-duplicate collapse before the
+#: quadratic candidate/verify work) defaults to "auto": decide per corpus
+#: via the distinct-content-ratio precheck below; True/False force it.
 #: Auto mode collapses only when the corpus is duplicate-heavy enough to
 #: pay for the rep-map + expansion joins: distinct-content ratio at or
 #: below this threshold (>= ~10% exact copies). Attribution at sf0.1
-#: (r9, tools/attrib_collapse.py) measured the collapse costing 1.3-1.6x
+#: (r9, docs/BENCH_NOTES.md) measured the collapse costing 1.3-1.6x
 #: on a dedup-LIGHT corpus (doc_dedup_clusters 6.10 s vs 3.74 s cold)
 #: while the k=20 sweep showed it is the difference between completing
 #: and a 38 GB spill on a duplicate-heavy one — so the cheap precheck
@@ -136,14 +132,9 @@ def _should_collapse(df: DataFrame, text_col: str) -> bool:
 def _resolve_collapse(
     dedup_exact_first: bool | str | None, df: DataFrame, text_col: str
 ) -> bool:
-    v = (
-        DEDUP_EXACT_FIRST_DEFAULT
-        if dedup_exact_first is None
-        else dedup_exact_first
-    )
-    if v == "auto":
+    if dedup_exact_first is None or dedup_exact_first == "auto":
         return _should_collapse(df, text_col)
-    return bool(v)
+    return bool(dedup_exact_first)
 
 
 def exact_dedup(

@@ -408,11 +408,7 @@ def rp_lsh_neardup_pairs(
     # pairs inherit the content pair's cosine (identical doubles), intra
     # copies pair at exactly 1.0. Gated on the same cheap distinct-ratio
     # precheck as the text pipelines.
-    decide = (
-        DD.DEDUP_EXACT_FIRST_DEFAULT
-        if dedup_exact_first is None
-        else dedup_exact_first
-    )
+    decide = "auto" if dedup_exact_first is None else dedup_exact_first
     if decide == "auto":
         # shared memoized precheck (dedup._distinct_ratio_precheck):
         # within one build the decision is paid once per (frame, column),

@@ -107,136 +107,18 @@ def register(
 # With 200+ registered queries the rotation is COMPUTED, not
 # hand-maintained: ``gate_order`` leads with RE_GATE (explicit re-checks),
 # then every query with no row in ANY committed CORRECTNESS_r*.json (the
-# never-gated debt, oldest-priority names from GATE_ORDER_HINT first, the
-# rest in registration order), then everything else ordered by the AGE of
-# its newest driver row (stalest certification first — round-1-vintage
-# rows re-certify before round-7 ones, since the engine underneath them
-# has been rewritten the most). Adding a query auto-queues it for the
-# next driver gate; a new CORRECTNESS file rotates the window with zero
-# edits here.
+# never-gated debt, in registration order), then everything else ordered
+# by the AGE of its newest driver row (stalest certification first —
+# round-1-vintage rows re-certify before round-7 ones, since the engine
+# underneath them has been rewritten the most). Adding a query
+# auto-queues it for the next driver gate; a new CORRECTNESS file rotates
+# the window with zero edits here.
 
 # Queries whose oracle or plan changed AFTER their latest driver row —
 # their old green rows are stale, so they re-gate even though a row
 # exists. PRUNE an entry once a post-fix CORRECTNESS row lands (cost of
 # forgetting: a wasted window slot, not starvation).
-RE_GATE: list[str] = [
-    # (All 3 r11 RE_GATE entries pruned: agg_bitmap_distinct_users,
-    # events_wau_bitmap_exact and streaming_bitmap_distinct each landed a
-    # hash-green row in CORRECTNESS_r11 under the word-slot rewrite.)
-    # r11 VERDICT item 2: both r11 rewrites missed the r11 oracle sample
-    # (their last green rows predate the rewrite) — re-certify first.
-    # Both were restructured AGAIN in r12 (percentile: exact twins from
-    # the distinct-value histogram; rrf: decoupled corpus stats), so the
-    # driver gate certifies the current code either way.
-    "agg_approx_percentile_bounded",
-    "agg_approx_percentile_bounded_diag",
-    "retrieval_hybrid_rrf",
-    # round 12 restructures (values pinned by parity tests at 3 SFs;
-    # plans changed after these queries' latest driver rows):
-    "doc_quality_logreg_hashed",        # per-round err persist
-    "doc_quality_logreg_hashed_topfeatures",
-    "text_bpe_train_merges",            # fused per-round jobs
-    "doc_exact_substring_dedup",        # fused iv consumers
-    "graph_pagerank_transitions",       # bounded driver gate
-    "doc_dedup_clusters",               # components null/nodes semantics
-    # lazy Lloyd-round checkpoints + scoped AQE floor (shared trainers):
-    "emb_ivfadc_recall_clustered",
-    "emb_pq_recall_report",
-    "emb_pq_k64_recall_clustered",
-    "emb_ivf_recall_report",
-    "emb_ivf_nprobe_sweep",
-    "emb_compression_ladder_clustered",
-]
-
-# Priority hint for the never-gated queue: oldest debt first (round-3-era
-# additions that predate the newest CORRECTNESS file). Names here that
-# HAVE earned a row are skipped automatically — a stale hint is harmless.
-GATE_ORDER_HINT: list[str] = [
-    # round 7: the 12 registry queries still lacking ANY driver row
-    # (VERDICT r6 "What's missing") — this is the last never-gated debt;
-    # after r7's window they all hold a CORRECTNESS row.
-    "streaming_holt_forecast",
-    "window_range_numeric_frame",
-    "join_null_safe_equality",
-    "join_asof_nearest",
-    "agg_bitmap_distinct_users",
-    "agg_weighted_median",
-    "basket_part_pair_lift",
-    "graph_triangle_count",
-    "orders_cohort_clv",
-    "orders_rfm_segmentation",
-    "orders_ship_lead_time",
-    "parts_abc_pareto",
-    # round 6: the never-gated entries whose semantics are hardest to
-    # trust from the local mirror alone (r5 VERDICT item 3) — streaming
-    # sketch replays, VARIANT shredding, TRY arithmetic. Promoted so the
-    # ~6 never-gated queries that spill past the 50-slot window into r7
-    # are the LOW-risk tail, not these.
-    "json_variant_shred",
-    "streaming_bitmap_distinct",
-    "streaming_cms_heavy_hitters",
-    "streaming_histogram_buckets",
-    "agg_conditional_family",
-    "scalar_try_arithmetic",
-    "events_chain_recursive_cte",
-    "events_wau_bitmap_exact",
-    "join_shuffle_hash_hint",
-    "window_rank_functions",
-    # round 5: UD4 on transformWithStateInPandas, unlocked by the vendored
-    # protobuf wire-format runtime (vendor/pbshim) — gate first: it is the
-    # round's flagship capability close (VERDICT r4 item 5)
-    "streaming_tws_counter",
-    # never gated as of r03: monitoring/events analytics (round 3)
-    "events_anomaly_zscore",
-    "events_user_profile",
-    "events_top_paths",
-    "events_error_budget_burn",
-    "events_alert_flap_detection",
-    "events_hourly_seasonality",
-    "agg_mode_most_frequent",
-    "promql_histogram_quantile",
-    "promql_avg_max_over_time",
-    "mqtt_topic_depth_stats",
-    "window_ntile_quartiles",
-    # never gated: joins / temporal (round 3)
-    "join_interval_overlap",
-    "scd2_point_in_time",
-    # never gated: LLM-data extensions (round 3)
-    "doc_containment_pairs",
-    "doc_mixture_resample",
-    "doc_quality_weighted_sample",
-    "doc_token_budget_trim",
-    "text_bigrams_topk",
-    "emb_centroid_confusion",
-    "emb_hard_negatives_centroid",
-    # round 4: IVF recall report (deterministic Lloyd -> oracle-checkable)
-    "emb_ivf_recall_report",
-    # round 4: new operators (BM25, BPE pairs, reservoir, winnowing,
-    # Markov transitions, MAD anomalies, unigram perplexity)
-    "text_bm25_search",
-    "text_bpe_merge_pairs",
-    "doc_reservoir_per_source",
-    "doc_winnowing_fingerprints",
-    "events_transition_matrix",
-    "events_anomaly_mad",
-    "doc_perplexity_unigram",
-    "emb_semantic_dedup",
-    # round 4 (late additions): product/events analytics + iterative graph
-    "events_funnel_conversion",
-    "events_retention_normalized",
-    "events_pivot_daily_wide",
-    "events_histogram_equiwidth",
-    "events_corr_value_hour",
-    "timeseries_ewma",
-    "graph_pagerank_transitions",
-    "text_collocations_pmi",
-    "text_zipf_profile",
-    "sketch_countmin_heavy_hitters",
-    "multimodal_audio_energy",
-    "doc_dsir_importance",
-    "text_char_entropy",
-    "events_cusum_changepoint",
-]
+RE_GATE: list[str] = []
 
 
 def _gated_rounds() -> dict[str, int]:
@@ -268,8 +150,8 @@ def _gated_rounds() -> dict[str, int]:
 def gate_order(names) -> list[str]:
     """Computed gate rotation over ``names`` (any iterable of registry
     names in registration order): RE_GATE first, then never-gated
-    (hint-ordered, then registration order), then the already-green rest
-    ordered stalest-certification-first (ascending newest-row round,
+    (registration order), then the already-green rest ordered
+    stalest-certification-first (ascending newest-row round,
     registration order as the tiebreak) so old green rows re-certify
     against the current engine before recent ones repeat.
     """
@@ -278,10 +160,6 @@ def gate_order(names) -> list[str]:
     rounds = _gated_rounds()
     lead: list[str] = [n for n in RE_GATE if n in in_reg]
     seen = set(lead)
-    for n in GATE_ORDER_HINT:
-        if n in in_reg and n not in rounds and n not in seen:
-            lead.append(n)
-            seen.add(n)
     for n in names:
         if n not in rounds and n not in seen:
             lead.append(n)

@@ -3119,14 +3119,16 @@ def _pagerank_body(spark, sf_dir, driver_max_edges: int = _PR_DRIVER_MAX_EDGES):
     ew_tab = edges.join(outs, "u").localCheckpoint()
     ew = F.broadcast(ew_tab)
     nodes = ev.select(F.col("event_type").alias("node")).distinct().localCheckpoint()
-    if driver_max_edges:
-        n_edges = ew_tab.count()  # one scalar; the checkpoint is hot
-        if n_edges <= driver_max_edges:
+    # the edge count is one scalar; the checkpoint is hot
+    if driver_max_edges and ew_tab.count() <= driver_max_edges:
+        node_ids = [r["node"] for r in nodes.collect()]
+        # an empty graph (1e9 / 0 nodes) or a NULL node id (sorted()
+        # cannot order it) falls through to the distributed rounds below
+        if node_ids and None not in node_ids:
             erows = [
                 (r["u"], r["v"], int(r["n"]), int(r["out_n"]))
                 for r in ew_tab.collect()
             ]
-            node_ids = [r["node"] for r in nodes.collect()]
             nn = len(node_ids)
             # identical arithmetic to the distributed rounds below, term
             # for term: every product/division is IEEE double exactly as

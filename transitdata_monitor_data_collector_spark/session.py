@@ -110,11 +110,6 @@ def get_spark(
     return spark
 
 
-def read_tables(spark: SparkSession, sf_dir: str, *names: str):
-    """Read driver-generated parquet tables (TESTDATA.md) as DataFrames."""
-    return tuple(spark.read.parquet(f"{sf_dir}/{n}.parquet") for n in names)
-
-
 def cluster_conf(
     total_cores: int,
     executor_memory_gb: int = 16,

@@ -176,14 +176,6 @@ def _f32(buf: bytes, pos: int) -> tuple[float, int]:
     return struct.unpack("<f", buf[pos : pos + 4])[0], pos + 4
 
 
-def _f64(buf: bytes, pos: int) -> tuple[float, int]:
-    import struct
-
-    if pos + 8 > len(buf):
-        raise FeedParseError("truncated double")
-    return struct.unpack("<d", buf[pos : pos + 8])[0], pos + 8
-
-
 def _iter_fields(buf: bytes):
     """Yield (fieldno, wire, value, raw_bytes) over a message body.
 

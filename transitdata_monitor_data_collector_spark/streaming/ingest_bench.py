@@ -313,18 +313,9 @@ def measure_store_to_serving(
             .load()
         )
         t0 = time.perf_counter()
-        # state width scaled to the KEY SPACE, not the core count: this
-        # workload's counter state is 6 series (2 brokers x 3 filters) —
-        # at the session default (32 here) every micro-batch scheduled
-        # and committed 32 near-empty state stores, ~2.4 s/batch of pure
-        # per-epoch overhead (r12 instrumented profile; interleaved A/B
-        # 300k msgs: 13.0-15.8k msg/s at width 4 vs 8.8-10.1k at 32).
-        # The same value is right at any deployment of this job — the
-        # series count, not the cluster, bounds the state.
         stream_merge_counter_job(
             spark, stream, table_path, BENCH_FILTERS,
             history_path=history_path,
-            state_partitions=4,
         )
         ingest_sec = time.perf_counter() - t0
 

@@ -10,6 +10,13 @@ once the watermark passes); counters use update-mode keyed state — at 100 TB
 switch the state store to RocksDB
 (spark.sql.streaming.stateStore.providerClass) and keep keys =
 (broker, topic_filter): cardinality is the registry size, tiny.
+
+State width: every stateful query the engine starts (``run_to_memory``,
+``stream_merge_counter_job``, the ``CollectorApp`` queries) goes through
+``start_stateful``, which runs it at min(session shuffle width,
+``STATE_WIDTH``). The width is set only while the query starts (Spark
+fixes a query's state partitioning then), so the shared session is never
+left pinned.
 """
 
 from __future__ import annotations
@@ -17,11 +24,13 @@ from __future__ import annotations
 import json
 import os
 import tempfile
+import threading
 import uuid
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from transitdata_monitor_data_collector_spark.functions.mqtt_match import (
     with_per_broker_fanout,
@@ -142,15 +151,6 @@ def connection_spans(messages: DataFrame) -> DataFrame:
     )
 
 
-def gauge_last_job(messages: DataFrame) -> DataFrame:
-    """A5: last-value gauge per broker (mqtt_connected analog): max_by over
-    event time, update mode."""
-    return messages.groupBy("broker").agg(
-        F.max_by("topic", "ts").alias("last_topic"),
-        F.max("ts").alias("last_ts"),
-    )
-
-
 def stream_stream_join_job(
     left: DataFrame,
     right: DataFrame,
@@ -195,6 +195,51 @@ def dedup_within_watermark_job(
     )
 
 
+#: State-store width of every stateful query the engine starts, capped by
+#: the session's shuffle width (:func:`start_stateful`). The collector's
+#: state is key-bounded: one row per (broker, topic_filter) series
+#: (MqttTopicMonitorListener.java:73-92), dozens at any deployment, so the
+#: filter config bounds it, not the cluster, while every micro-batch
+#: schedules and commits one store per shard. Measured, widths
+#: interleaved: replay ingest of 100k msgs on 4 cores spent 296-326 ms of
+#: summed state commit at width 4 vs 724-774 ms at 8, and ran 18.6k vs
+#: 12.5-17.5k msg/s; store->serving of 300k msgs on 32 cores ran
+#: 13.0-15.8k msg/s at 4 vs 8.8-10.1k at 32. The registry replays whose
+#: state grows with users or topics (stream join, dedup within
+#: watermark, session windows, windowed rate; bitmap distinct and the
+#: hourly rollups at sf0.1 only) were timed at 4 vs 8 on 4 cores only,
+#: at sf0.1 and at 20x sf0.1 over 16 batches: none slower at 4 beyond
+#: the run-to-run spread, the stream join 18.4 vs 24.1 s at 20x. On wider
+#: machines, re-time those before trusting this value for them.
+STATE_WIDTH = 4
+_START_LOCK = threading.Lock()
+
+
+def start_stateful(
+    spark: SparkSession, writer: DataStreamWriter
+) -> StreamingQuery:
+    """Start ``writer`` at state width min(session
+    spark.sql.shuffle.partitions, :data:`STATE_WIDTH`) — the one place
+    the engine sets it.
+
+    A query clones its session conf when it starts and its first batch
+    writes that width into the offset log, so the width is set only
+    around ``start()`` and restored right after: the session itself, as
+    the query's foreachBatch sink, other queries and concurrent scrapes
+    read it, keeps its own width. A restart from a checkpoint keeps the
+    width it was first run with, whatever the session says."""
+    key = "spark.sql.shuffle.partitions"
+    # serialized: two interleaved starts would restore each other's
+    # pinned width and leave the session at STATE_WIDTH
+    with _START_LOCK:
+        prev = spark.conf.get(key)
+        spark.conf.set(key, str(min(int(prev), STATE_WIDTH)))
+        try:
+            return writer.start()
+        finally:
+            spark.conf.set(key, prev)
+
+
 def run_to_memory(
     spark: SparkSession,
     streaming_df: DataFrame,
@@ -213,33 +258,28 @@ def run_to_memory(
     advancing, giving real multi-batch watermark semantics."""
     name = name or f"mem_{uuid.uuid4().hex[:12]}"
     checkpoint = _tmp_checkpoint("ckpt_")
-    # State-store shards should track STATE SIZE (key cardinality), not
-    # batch CPU parallelism: every micro-batch pays per-shard commit
-    # overhead, and these jobs keep a handful of (broker, filter, window)
-    # keys. The count is pinned into the checkpoint at first batch, so
-    # set it before start and restore only after the blocking run ends.
-    # Production jobs size this to keys/executors in their own session.
-    prev_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(min(8, int(prev_sp or 8)))
-    )
+    # The state width follows the engine's one rule (start_stateful:
+    # min(session width, STATE_WIDTH), fixed when the query starts), the
+    # same width production's CollectorApp and merge jobs run at.
     # recentProgress is a ring buffer capped at numRecentProgressUpdates
     # (default 100) — a replay producing more micro-batches than the cap
     # would silently drop its OLDEST progress events, under-counting any
     # sum over last_progress() (the multibroker message-conservation
     # check, r9 ADVICE). Raise the cap for the run; _LAST_PROGRESS is
     # then complete for any sane parameterization, and consumers can
-    # still assert len < cap as a truncation guard.
+    # still assert len < cap as a truncation guard. Unlike the state
+    # width, the cap is read from the session on every batch, not
+    # captured at start, so it stays pinned until the run ends.
     _CAP = "spark.sql.streaming.numRecentProgressUpdates"
     prev_cap = spark.conf.get(_CAP, None)
     spark.conf.set(_CAP, str(RECENT_PROGRESS_CAP))
     try:
-        q = (
+        q = start_stateful(
+            spark,
             streaming_df.writeStream.format("memory")
             .queryName(name)
             .outputMode(output_mode)
-            .option("checkpointLocation", checkpoint)
-            .start()
+            .option("checkpointLocation", checkpoint),
         )
         q.processAllAvailable()
         global _LAST_PROGRESS
@@ -247,7 +287,6 @@ def run_to_memory(
         q.stop()
         q.awaitTermination()
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
         if prev_cap is None:
             spark.conf.unset(_CAP)
         else:
@@ -690,7 +729,6 @@ def stream_merge_counter_job(
     filters: Sequence[str],
     checkpoint: str | None = None,
     history_path: str | None = None,
-    state_partitions: int | None = None,
 ) -> None:
     """Maintain the per-(broker, topic_filter) counter table as a VERSIONED
     MERGE TABLE via foreachBatch: update-mode aggregation emits only the
@@ -726,20 +764,7 @@ def stream_merge_counter_job(
     at-least-once, which the rate read path absorbs by construction:
     an exact duplicate (key, ts, counter) sample contributes zero to
     the reset-guarded delta (functions/promql.py), so rate/increase
-    results are duplicate-immune without any dedup pass.
-
-    ``state_partitions``: width of the stateful aggregate's state store
-    (pinned via spark.sql.shuffle.partitions for the lifetime of this
-    blocking query, restored afterwards). The counter state is
-    KEY-BOUNDED by design — one row per (broker, topic_filter) series,
-    dozens at any deployment size — so its natural width scales with
-    the series count, not the cluster: at the session default (2-3x
-    total cores) every micro-batch schedules and commits that many
-    near-empty state stores, which is pure per-epoch overhead (r12
-    profile: an EMPTY final batch spent 2.4 s in addBatch at width 32).
-    None keeps the session conf (existing callers unchanged). Restarts
-    from a checkpoint ignore a changed value by construction — Spark
-    pins the state width in the offset log at first batch."""
+    results are duplicate-immune without any dedup pass."""
     from transitdata_monitor_data_collector_spark.sinks.parquet import (
         merge_upsert,
         write_time_partitioned,
@@ -753,81 +778,83 @@ def stream_merge_counter_job(
     run_token = "" if checkpoint is not None else uuid.uuid4().hex[:12] + ":"
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        # persist BEFORE the isEmpty probe: every driver-side action on
-        # the batch frame (isEmpty, the merge's anti-join, the history
-        # projection) re-evaluates the plan otherwise — with the cache
-        # the delta materializes once and each subsequent job reads the
-        # cached rows
-        batch_df = batch_df.persist()
+        # materialize the delta ONCE, on the driver: the batch frame is a
+        # scan of the stateful plan's RDD, so every action on it (the
+        # merge's anti-join AND union, the history projection) would
+        # re-run the aggregation and commit its state again. A cache
+        # does not cover the merge (its union reads a re-instanced copy
+        # of the scan, which misses the cache). The delta is key-bounded
+        # (one row per changed (broker, topic_filter)), so one collect
+        # is cheap, leaves no blocks behind and survives executor loss.
+        # The rows stay in the JVM as a local relation: it carries its
+        # real size, so the merge broadcasts it, and timestamps keep
+        # their instant. createDataFrame(<python list>) would plan a
+        # sort-merge join (unknown size) and read the rows through
+        # Python workers on every job, ~3x slower per merge.
+        jdf = batch_df._jdf
+        rows = jdf.collectAsList()
+        if rows.isEmpty():  # update mode emits only deltas
+            return
+        batch_df = DataFrame(
+            spark._jsparkSession.createDataFrame(rows, jdf.schema()), spark
+        )
         ledger_id = f"{run_token}{batch_id}"
-        try:
-            if batch_df.isEmpty():  # update mode emits only deltas
-                return
-            # merge FIRST: if it raises, no orphan history samples land;
-            # if it replays (ledger no-op), the marker below decides
-            # whether the history append already happened.
-            # validate_keys=False: update-mode agg output is one row per
-            # group key BY CONSTRUCTION (and fan-out never emits null
-            # broker/filter) — the uniqueness job would be a 4th Spark
-            # job per micro-batch for an invariant the engine already
-            # guarantees. target_files=1: the counter table is
-            # key-bounded (one row per (broker, topic_filter) series),
-            # so each version is ONE file instead of
-            # shuffle-partition-many near-empty ones — the versioned
-            # store's per-epoch I/O transaction count is what throttles
-            # the store->serving path on slow disks.
-            merge_upsert(
-                spark,
-                table_path,
-                batch_df.drop("last_ts"),
-                ["broker", "topic_filter"],
-                batch_id=ledger_id,
-                validate_keys=False,
-                target_files=1,
+        # merge FIRST: if it raises, no orphan history samples land;
+        # if it replays (ledger no-op), the marker below decides
+        # whether the history append already happened.
+        # validate_keys=False: update-mode agg output is one row per
+        # group key BY CONSTRUCTION (and fan-out never emits null
+        # broker/filter) — the uniqueness job would be a 4th Spark
+        # job per micro-batch for an invariant the engine already
+        # guarantees. target_files=1: the counter table is
+        # key-bounded (one row per (broker, topic_filter) series),
+        # so each version is ONE file instead of
+        # shuffle-partition-many near-empty ones — the versioned
+        # store's per-epoch I/O transaction count is what throttles
+        # the store->serving path on slow disks.
+        merge_upsert(
+            spark,
+            table_path,
+            batch_df.drop("last_ts"),
+            ["broker", "topic_filter"],
+            batch_id=ledger_id,
+            validate_keys=False,
+            target_files=1,
+        )
+        if history_path is not None:
+            marker_dir = os.path.join(history_path, "_batches")
+            marker = os.path.join(
+                marker_dir, ledger_id.replace(":", "_")
             )
-            if history_path is not None:
-                marker_dir = os.path.join(history_path, "_batches")
-                marker = os.path.join(
-                    marker_dir, ledger_id.replace(":", "_")
+            if not os.path.exists(marker):
+                write_time_partitioned(
+                    batch_df.select(
+                        F.col("last_ts").alias("ts"),
+                        "broker",
+                        "topic_filter",
+                        F.col("messages_received_total")
+                        .cast("double")
+                        .alias("counter"),
+                    ),
+                    history_path,
+                    ts_col="ts",
+                    sort_cols=("broker", "topic_filter"),
+                    mode="append",
                 )
-                if not os.path.exists(marker):
-                    write_time_partitioned(
-                        batch_df.select(
-                            F.col("last_ts").alias("ts"),
-                            "broker",
-                            "topic_filter",
-                            F.col("messages_received_total")
-                            .cast("double")
-                            .alias("counter"),
-                        ),
-                        history_path,
-                        ts_col="ts",
-                        sort_cols=("broker", "topic_filter"),
-                        mode="append",
-                    )
-                    os.makedirs(marker_dir, exist_ok=True)
-                    tmp = marker + ".tmp"
-                    with open(tmp, "w"):
-                        pass
-                    os.rename(tmp, marker)  # atomic: marker appears last
-        finally:
-            batch_df.unpersist()
+                os.makedirs(marker_dir, exist_ok=True)
+                tmp = marker + ".tmp"
+                with open(tmp, "w"):
+                    pass
+                os.rename(tmp, marker)  # atomic: marker appears last
 
-    conf_key = "spark.sql.shuffle.partitions"
-    saved = spark.conf.get(conf_key) if state_partitions else None
-    try:
-        if state_partitions:
-            spark.conf.set(conf_key, str(state_partitions))
-        q = (
+    _drain(
+        start_stateful(
+            spark,
             totals.writeStream.foreachBatch(sink)
             .outputMode("update")
             .option(
                 "checkpointLocation",
                 checkpoint or _tmp_checkpoint("ckpt_merge_"),
-            )
-            .start()
+            ),
         )
-        _drain(q)
-    finally:
-        if saved is not None:
-            spark.conf.set(conf_key, saved)
+    )
