@@ -138,7 +138,24 @@ def test_null_endpoint_edges_ignored_both_paths(spark):
     assert fast2 == slow2 == {1: 1, 2: 1}
 
 
-def test_no_edges_all_singletons(spark):
-    edges = spark.createDataFrame([], "src long, dst long")
-    nodes = spark.createDataFrame([(1,), (2,), (3,)], "id long")
-    assert _labels(connected_components(edges, nodes=nodes)) == {1: 1, 2: 2, 3: 3}
+@pytest.mark.parametrize(
+    "edge_rows, node_ids, expected",
+    [
+        ([], [1, 2, 3], {1: 1, 2: 2, 3: 3}),
+        ([], None, {}),
+        ([(7, 4)], None, {4: 4, 7: 4}),
+    ],
+    ids=["no_edges_with_nodes", "no_edges_no_nodes", "single_edge"],
+)
+def test_no_edges_all_singletons(spark, edge_rows, node_ids, expected):
+    # degenerate inputs: the driver union-find fast path must give the
+    # distributed rounds' labels
+    edges = spark.createDataFrame(edge_rows, "src long, dst long")
+    nodes = (
+        None
+        if node_ids is None
+        else spark.createDataFrame([(i,) for i in node_ids], "id long")
+    )
+    fast = _labels(connected_components(edges, nodes=nodes))
+    slow = _labels(connected_components(edges, nodes=nodes, driver_max_edges=0))
+    assert fast == slow == expected

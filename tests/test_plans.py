@@ -451,6 +451,41 @@ def test_aqe_coalesces_shuffle_partitions(spark, sf_dir):
     )
 
 
+_PQ_IVF_QUERIES = (
+    "emb_ivf_recall_report",
+    "emb_pq_recall_report",
+    "emb_pq_recall_clustered",
+    "emb_pq_k64_recall_clustered",
+    "emb_ivfadc_recall_clustered",
+    "emb_compression_ladder_clustered",
+    "emb_ivf_nprobe_sweep",
+)
+
+
+def _width_confs(spark) -> dict[str, str]:
+    return {
+        k: v
+        for k, v in spark.conf.getAll.items()
+        if k.startswith("spark.sql.adaptive.")
+        or k == "spark.sql.shuffle.partitions"
+    }
+
+
+def test_registry_builds_leave_width_conf_unchanged(spark, sf_dir):
+    """A registry build must not change the session's partition-width
+    conf: AQE reads it at execution time, so a value left behind by one
+    build would govern whatever query, stream or serving job runs next.
+    q1 is built first and collected last (build A, build B, collect A),
+    so it must run under the conf it was built under."""
+    before = _width_confs(spark)
+    q1 = REGISTRY["q1_pricing_summary"].build(spark, sf_dir)
+    for name in _PQ_IVF_QUERIES:
+        REGISTRY[name].build(spark, sf_dir)
+    assert _width_confs(spark) == before
+    q1.collect()
+    assert _width_confs(spark) == before
+
+
 def test_runtime_bloom_filter_injects_on_selective_shuffle_join(spark, sf_dir):
     """Spark's runtime row-level bloom filter (the engine's semi-join
     reduction): when a shuffle join's build side carries a selective

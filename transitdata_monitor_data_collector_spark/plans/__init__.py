@@ -15,36 +15,10 @@ Conventions (driver contract):
 
 from __future__ import annotations
 
-import functools
-import os
 from collections.abc import Callable
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
-
-#: Session confs that individual queries may override for THEIR execution
-#: only (performance knobs — never semantics). The registry build wrapper
-#: pins each key to the query's override or this default before every
-#: build, so an override can never leak into the next query's run.
-#: Rationale for the one current key: AQE's partition coalescing is
-#: byte-based and CPU-blind — the PQ/IVF trainer shuffles compress to
-#: ~1 MB while carrying seconds of CPU-dense distance math, so those
-#: queries lower the floor to stay wide (r11). Applied SESSION-WIDE in
-#: r11, the 64k floor kept every tiny trainer-round shuffle at full task
-#: width and regressed the small-query tail 20-130% at 32 cores (r11
-#: VERDICT item 1) — hence per-query scoping. At cluster scale shuffle
-#: partitions sit far above either floor and both values are inert.
-def _scoped_conf_defaults() -> dict[str, str]:
-    return {
-        "spark.sql.adaptive.coalescePartitions.minPartitionSize": (
-            os.environ.get("SPARK_GRAFT_AQE_MIN_PARTITION_SIZE", "1MB")
-        ),
-    }
-
-
-def _apply_scoped_conf(spark: SparkSession, overrides: dict[str, str]) -> None:
-    for k, default in _scoped_conf_defaults().items():
-        spark.conf.set(k, overrides.get(k, default))
 
 
 @dataclass(frozen=True)
@@ -61,7 +35,6 @@ class Query:
     oracle: str | None
     doc: str = ""
     tags: tuple[str, ...] = ()
-    session_conf: dict[str, str] = field(default_factory=dict)
 
 
 REGISTRY: dict[str, Query] = {}
@@ -72,30 +45,12 @@ def register(
     oracle: str | None = None,
     doc: str = "",
     tags: tuple[str, ...] = (),
-    session_conf: dict[str, str] | None = None,
 ) -> Callable:
-    """Decorator: add a (spark, sf_dir) -> DataFrame builder to the registry.
-
-    ``session_conf`` holds per-query overrides for the scoped performance
-    confs (see ``_scoped_conf_defaults``); every registry build — with or
-    without overrides — pins those keys first, so one query's override
-    cannot bleed into another query's measurement."""
+    """Decorator: add a (spark, sf_dir) -> DataFrame builder to the registry."""
 
     def deco(fn: Callable[[SparkSession, str], DataFrame]):
-        overrides = dict(session_conf or {})
-
-        @functools.wraps(fn)
-        def build(spark: SparkSession, sf_dir: str) -> DataFrame:
-            _apply_scoped_conf(spark, overrides)
-            return fn(spark, sf_dir)
-
         REGISTRY[name] = Query(
-            name=name,
-            build=build,
-            oracle=oracle,
-            doc=doc,
-            tags=tags,
-            session_conf=overrides,
+            name=name, build=fn, oracle=oracle, doc=doc, tags=tags
         )
         return fn
 

@@ -2163,19 +2163,6 @@ def text_bigrams_topk(spark, sf_dir):
     )
 
 
-#: Per-query scoped AQE floor (plans/__init__.py register(session_conf=)):
-#: the PQ/IVF trainer family's post-shuffle stages carry seconds of
-#: CPU-dense distance math in ~1 MB of compressed shuffle bytes, so the
-#: default byte-based coalescing serializes them onto 1-2 cores (profiled
-#: r11: the whole IVFADC pipeline ran tasks=1 on local[32]). The 64k floor
-#: keeps exactly these queries wide; every other query runs under Spark's
-#: 1 MB default (the session-wide 64k floor regressed the small-query
-#: tail 20-130% at 32 cores — r11 VERDICT item 1).
-_WIDE_AQE_CONF = {
-    "spark.sql.adaptive.coalescePartitions.minPartitionSize": "64k",
-}
-
-
 # Recall reports compute exact ground truth with an O(queries x corpus)
 # brute-force pass (10 query vectors broadcast against every candidate).
 # That is the right shape for a REPORT — bounded by the capped query set —
@@ -2512,7 +2499,6 @@ def _ivf_oracle_sql() -> str:
 
 @register(
     "emb_ivf_recall_report",
-    session_conf=_WIDE_AQE_CONF,
     oracle=_ivf_oracle_sql(),
     doc="IVF ANN quality gate, fully oracle-checkable: recall@10 of an "
     f"nprobe={_IVF_NPROBE} probe over a k={_IVF_K} inverted-file index vs "
@@ -6709,7 +6695,6 @@ def _pq_oracle_sql(
 
 @register(
     "emb_pq_recall_report",
-    session_conf=_WIDE_AQE_CONF,
     oracle=_pq_oracle_sql(),
     doc="Product-quantization retrieval QA (Jegou et al., TPAMI 2011), "
     f"fully oracle-checkable: recall@10 of ADC ranking over M={_PQ_M} "
@@ -6866,7 +6851,6 @@ _PQ_E_CLUSTERED = f"""SELECT vec_id,
 
 @register(
     "emb_pq_recall_clustered",
-    session_conf=_WIDE_AQE_CONF,
     oracle=_pq_oracle_sql(_PQ_E_CLUSTERED),
     doc="PQ retrieval QA on a corpus WITH planted cluster structure: "
     f"{_PQ_CLUSTERS} md5-seeded cluster centers in [-1,1]^64, each vector "
@@ -6943,7 +6927,6 @@ def _pq_clustered_corpus(spark, sf_dir):
 
 @register(
     "emb_pq_k64_recall_clustered",
-    session_conf=_WIDE_AQE_CONF,
     oracle=_pq_oracle_sql(_PQ_E_CLUSTERED, k=64),
     doc="The PQ operating point that WORKS on the clustered corpus (r7 "
     "VERDICT item 6 — completing the compression story the K=16 honest "
@@ -7117,7 +7100,6 @@ def _ivfadc_oracle_sql(e_src: str) -> str:
 
 @register(
     "emb_ivfadc_recall_clustered",
-    session_conf=_WIDE_AQE_CONF,
     oracle=_ivfadc_oracle_sql(_PQ_E_CLUSTERED),
     doc="IVFADC retrieval QA (Jegou et al., TPAMI 2011 — the full "
     "IVF + PQ-on-residuals production pipeline, composed from the two "
@@ -7264,7 +7246,6 @@ def _lad_sq_long(a, b, k: int):
 
 @register(
     "emb_compression_ladder_clustered",
-    session_conf=_WIDE_AQE_CONF,
     oracle=f"""
     WITH e AS (
         {_PQ_E_CLUSTERED}
@@ -8095,7 +8076,6 @@ def _ivf_sweep_oracle_sql() -> str:
 
 @register(
     "emb_ivf_nprobe_sweep",
-    session_conf=_WIDE_AQE_CONF,
     oracle=_ivf_sweep_oracle_sql(),
     doc="The IVF tuning curve: recall@10 swept over nprobe in {1, 2, 4} "
     f"against the k={_IVF_K} deterministic index of "

@@ -2,9 +2,10 @@
 
 One place to pin the session config the whole engine assumes:
 UTC session timezone (the reference emits ISO-8601 UTC wall-clock times,
-src/mqtt_data_collector.py:229), AQE for runtime re-planning, Arrow for
-any pandas-UDF path.  Shuffle partitions default to the local core count
-— on a real cluster this is overridden to ~2-3× total cores (see README).
+src/mqtt_data_collector.py:229), AQE for runtime re-planning at Spark's
+default coalescing floor, Arrow for any pandas-UDF path.  Shuffle
+partitions default to the local core count — on a real cluster this is
+overridden to ~2-3× total cores (see README).
 """
 
 from __future__ import annotations
@@ -49,21 +50,6 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        # AQE's coalescing is byte-based and CPU-blind: a CPU-dense
-        # shuffle that compresses to ~1 MB (the PQ/IVF trainers' fanned
-        # distance evaluations) coalesces to 1-2 post-shuffle partitions
-        # and serializes on one core. r11 lowered minPartitionSize to 64k
-        # SESSION-WIDE to keep those stages wide — which also kept every
-        # tiny trainer-round shuffle at full task width and regressed the
-        # small-query tail 20-130% at 32 cores (r11 VERDICT item 1, the
-        # anti-scaling cluster). r12 scopes the 64k floor to the PQ/IVF
-        # queries via per-query session_conf in the registry
-        # (plans/__init__.py); the session keeps Spark's 1 MB default
-        # unless a deployment overrides it explicitly.
-        .config(
-            "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-            os.environ.get("SPARK_GRAFT_AQE_MIN_PARTITION_SIZE", "1MB"),
-        )
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         # let AQE coalesce CACHED plans too: by default Spark pins a
         # cached plan's output partitioning (false), so every iterative
@@ -77,11 +63,8 @@ def get_spark(
         # caches schedule 1-2 tasks instead of 32. Values are unchanged
         # (the engine's determinism dialect is partition-order-free by
         # construction, gated per query by the DuckDB oracle).
-        # Env-overridable like the AQE floor above (r11 ADVICE item 4) so
-        # deployments can revert to Spark's default without code changes.
         .config(
-            "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-            os.environ.get("SPARK_GRAFT_AQE_CACHED_PLAN_PARTITIONING", "true"),
+            "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true"
         )
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.optimizer.nestedSchemaPruning.enabled", "true")
