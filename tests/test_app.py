@@ -363,3 +363,26 @@ def test_connection_spans_feed_disconnect_correction(
         .collect()[0]["rate"]
     )
     assert rate == pytest.approx(10 / 100.0)
+
+
+def test_ephemeral_checkpoints_are_removed(spark, replay_stream):
+    """run_to_memory and a CollectorApp start/stop leave no checkpoint
+    dir behind in either checkpoint base."""
+    import os
+    import tempfile
+
+    from transitdata_monitor_data_collector_spark.streaming.jobs import run_to_memory
+
+    bases = [b for b in ("/dev/shm", tempfile.gettempdir()) if os.path.isdir(b)]
+
+    def checkpoints():
+        return {b: sum(e.startswith("ckpt_") for e in os.listdir(b)) for b in bases}
+
+    before = checkpoints()
+    assert run_to_memory(spark, replay_stream).count() == 61
+    app = CollectorApp(spark, CONFIG, replay_stream).start()
+    try:
+        app.process_available()
+    finally:
+        app.stop()
+    assert checkpoints() == before

@@ -303,3 +303,36 @@ def test_per_broker_fanout_no_double_count_for_duplicate_filters(spark):
         msgs, {"brokerA": ["/hfp/v2/journey/#", "/hfp/v2/journey/#"]}
     ).collect()
     assert len(fanned) == 1
+
+
+def test_fanouts_normalize_the_topic_once_per_row(spark):
+    """The trailing-slash normalization is projected once per row, not
+    evaluated inside every filter's rlike under the explode."""
+    from transitdata_monitor_data_collector_spark.functions.mqtt_match import (
+        with_per_broker_fanout,
+    )
+    from transitdata_monitor_data_collector_spark.plans.monitoring import (
+        DASHBOARD_FILTERS,
+        PER_BROKER_FILTERS,
+    )
+
+    msgs = spark.createDataFrame(
+        [("tcp://mqtt.hsl.fi:1883", "/hfp/v2/journey/ongoing/vp/ferry/1019/")],
+        "broker string, topic string",
+    )
+
+    def calls(df):
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        return plan.count("regexp_replace"), plan.count("RLIKE")
+
+    single = with_topic_filter_fanout(msgs, DASHBOARD_FILTERS)
+    per_broker = with_per_broker_fanout(msgs, PER_BROKER_FILTERS)
+    dropping = with_topic_filter_fanout(msgs, DASHBOARD_FILTERS, unknown=None)
+    # one normalization and one rlike per filter, per row
+    for df in (single, per_broker, dropping):
+        assert calls(df) == (1, len(DASHBOARD_FILTERS))
+        assert df.columns == ["broker", "topic", "topic_filter"]
+    assert sorted(r.topic_filter for r in single.collect()) == [
+        "/hfp/v2/journey/#",
+        "/hfp/v2/journey/ongoing/+/ferry/#",
+    ]

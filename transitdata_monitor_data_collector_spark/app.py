@@ -22,6 +22,7 @@ usable on its own.
 
 from __future__ import annotations
 
+import shutil
 import tempfile
 import uuid
 from dataclasses import dataclass, field
@@ -56,6 +57,7 @@ class CollectorApp:
     _counter_view: str = ""
     _connection_view: str = ""
     _scrape_rows: list = field(default_factory=list)
+    _checkpoints: list = field(default_factory=list)
 
     def start(self) -> "CollectorApp":
         # per-broker filter sets (Main.java:76-85): each message is matched
@@ -69,10 +71,7 @@ class CollectorApp:
         # each stateful query starts at the engine's one state-width rule
         def start_query(writer):
             return jobs.start_stateful(
-                self.spark,
-                writer.option(
-                    "checkpointLocation", tempfile.mkdtemp(prefix="ckpt_app_")
-                ),
+                self.spark, writer.option("checkpointLocation", self._checkpoint())
             )
 
         # counter job -> in-memory serving table for /metrics
@@ -148,13 +147,17 @@ class CollectorApp:
             # not participate in process_available()'s processAllAvailable
             self._ticker_queries.append(
                 ticker.writeStream.trigger(processingTime=f"{secs} seconds")
-                .option(
-                    "checkpointLocation", tempfile.mkdtemp(prefix="ckpt_app_")
-                )
+                .option("checkpointLocation", self._checkpoint())
                 .foreachBatch(scrape_batch)
                 .start()
             )
         return self
+
+    def _checkpoint(self) -> str:
+        """A fresh per-query checkpoint dir, removed by :meth:`stop`."""
+        path = tempfile.mkdtemp(prefix="ckpt_app_")
+        self._checkpoints.append(path)
+        return path
 
     # -- serving surface ---------------------------------------------------
 
@@ -274,6 +277,10 @@ class CollectorApp:
             q.stop()
         self._queries.clear()
         self._ticker_queries.clear()
+        # every query is stopped: its checkpoint is never read again
+        for path in self._checkpoints:
+            shutil.rmtree(path, ignore_errors=True)
+        self._checkpoints.clear()
 
 
 def build_broker_streams(

@@ -129,11 +129,45 @@ def matching_filters_col(topic: Column, filters: Sequence[str]) -> Column:
     Scale note: O(|filters|) predicates fused into one codegen stage — no
     join, no shuffle, no Python.
     """
-    norm = normalize_topic_col(topic)
+    return _match_normalized(normalize_topic_col(topic), filters)
+
+
+# Fan-outs evaluate the normalization and each filter's rlike once per row:
+# Catalyst does not share subexpressions inside explode's generator, so an
+# inline tree ran regexp_replace once per filter and, under the unknown
+# bucket's CASE, every rlike twice. The normalized topic, and for the
+# bucket the match array, are projected into these columns and dropped
+# after. Without the bucket the generator reads the match expression
+# itself: explode over a bare column makes the optimizer infer a
+# size() > 0 filter and push a copy of the whole expression below the
+# projections.
+_NORM_COL = "__mqtt_topic_normalized"
+_MATCH_COL = "__mqtt_matched_filters"
+
+
+def _match_normalized(norm: Column, filters: Sequence[str]) -> Column:
+    """``matching_filters_col`` over an already-normalized topic."""
     slots = [F.when(norm.rlike(filter_to_regex(f)), F.lit(f)) for f in filters]
     if not slots:  # empty registry → empty array (matcher test :181-191)
         return F.array().cast("array<string>")
     return F.array_compact(F.array(*slots))
+
+
+def _explode_matches(
+    df: DataFrame,
+    topic_col: str,
+    matched: Column,
+    out_col: str,
+    unknown: str | None,
+) -> DataFrame:
+    """One output row per matched filter (``unknown`` bucket, or no row,
+    for none), with ``matched`` reading the normalized topic column."""
+    out = df.withColumn(_NORM_COL, normalize_topic_col(F.col(topic_col)))
+    if unknown is not None:
+        out = out.withColumn(_MATCH_COL, matched)
+        arr = F.col(_MATCH_COL)
+        matched = F.when(F.size(arr) == 0, F.array(F.lit(unknown))).otherwise(arr)
+    return out.withColumn(out_col, F.explode(matched)).drop(_NORM_COL, _MATCH_COL)
 
 
 def with_topic_filter_fanout(
@@ -149,13 +183,8 @@ def with_topic_filter_fanout(
 
     Set ``unknown=None`` to drop non-matching rows instead.
     """
-    matched = matching_filters_col(F.col(topic_col), filters)
-    if unknown is not None:
-        matched = F.when(F.size(matched) == 0, F.array(F.lit(unknown))).otherwise(
-            matched
-        )
-        return df.withColumn(out_col, F.explode(matched))
-    return df.withColumn(out_col, F.explode(matched))
+    matched = _match_normalized(F.col(_NORM_COL), filters)
+    return _explode_matches(df, topic_col, matched, out_col, unknown)
 
 
 def match_filters_join(
@@ -237,9 +266,9 @@ def with_per_broker_fanout(
     dropped when ``unknown=None``).
     """
     matched = None
-    topic = F.col(topic_col)
+    norm = F.col(_NORM_COL)
     for broker, filters in broker_filters.items():
-        arr = matching_filters_col(topic, list(dict.fromkeys(filters)))
+        arr = _match_normalized(norm, list(dict.fromkeys(filters)))
         cond = F.col(broker_col) == broker
         matched = (
             F.when(cond, arr) if matched is None else matched.when(cond, arr)
@@ -247,9 +276,4 @@ def with_per_broker_fanout(
     if matched is None:
         raise ValueError("broker_filters is empty")
     matched = matched.otherwise(F.array().cast("array<string>"))
-    if unknown is not None:
-        matched = F.when(F.size(matched) == 0, F.array(F.lit(unknown))).otherwise(
-            matched
-        )
-        return df.withColumn(out_col, F.explode(matched))
-    return df.withColumn(out_col, F.explode(matched))
+    return _explode_matches(df, topic_col, matched, out_col, unknown)

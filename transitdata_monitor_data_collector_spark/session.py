@@ -6,13 +6,29 @@ src/mqtt_data_collector.py:229), AQE for runtime re-planning at Spark's
 default coalescing floor, Arrow for any pandas-UDF path.  Shuffle
 partitions default to the local core count — on a real cluster this is
 overridden to ~2-3× total cores (see README).
+
+It also points every Python process Spark starts (daemons, UDF workers,
+the per-query streaming-source runners) at the worker bootstrap in
+``_pyworker/``. Spark puts ``$SPARK_HOME/python/lib/pyspark.zip`` first
+on their path; the zip carries no bytecode, so each fresh process spent
+about 1 s recompiling pyspark (importing the streaming-source runner:
+1.26-1.34 s from the zip, 0.26-0.32 s from the installed package of the
+same version). A collector run starts ~31 such processes, two in series
+before each query's first trigger. The bootstrap drops the zip only
+where the worker's interpreter has the same pyspark installed, so
+workers load the cached bytecode the driver already uses; elsewhere (a
+cluster executor without the engine, another version) it is a no-op.
 """
 
 from __future__ import annotations
 
+import importlib.util
 import os
 
 from pyspark.sql import SparkSession
+
+_PYWORKER_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "_pyworker")
+_WORKER_PATH_KEY = "spark.executorEnv.PYTHONPATH"
 
 
 def get_spark(
@@ -86,11 +102,24 @@ def get_spark(
         # wait. The versioned-store merge path (one small job per
         # micro-batch epoch) was throttled by exactly this.
         builder = builder.config("spark.locality.wait", "0s")
-    for k, v in (extra_conf or {}).items():
+    for k, v in _with_worker_bootstrap(extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def _with_worker_bootstrap(conf: dict[str, str]) -> dict[str, str]:
+    """``conf`` with the worker bootstrap appended to the workers'
+    PYTHONPATH (after any value the caller set). Skipped when the
+    interpreter already has a ``sitecustomize``: the bootstrap's would
+    shadow it in every worker."""
+    if importlib.util.find_spec("sitecustomize") is not None:
+        return conf
+    paths = [p for p in conf.get(_WORKER_PATH_KEY, "").split(os.pathsep) if p]
+    if _PYWORKER_DIR not in paths:
+        paths.append(_PYWORKER_DIR)
+    return {**conf, _WORKER_PATH_KEY: os.pathsep.join(paths)}
 
 
 def cluster_conf(

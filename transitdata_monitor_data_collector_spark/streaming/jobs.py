@@ -21,12 +21,14 @@ left pinned.
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
+import shutil
 import tempfile
 import threading
 import uuid
-from collections.abc import Sequence
+from collections.abc import Iterator, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -257,7 +259,6 @@ def run_to_memory(
     tests. processAllAvailable keeps triggering until the source stops
     advancing, giving real multi-batch watermark semantics."""
     name = name or f"mem_{uuid.uuid4().hex[:12]}"
-    checkpoint = _tmp_checkpoint("ckpt_")
     # The state width follows the engine's one rule (start_stateful:
     # min(session width, STATE_WIDTH), fixed when the query starts), the
     # same width production's CollectorApp and merge jobs run at.
@@ -274,18 +275,19 @@ def run_to_memory(
     prev_cap = spark.conf.get(_CAP, None)
     spark.conf.set(_CAP, str(RECENT_PROGRESS_CAP))
     try:
-        q = start_stateful(
-            spark,
-            streaming_df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .option("checkpointLocation", checkpoint),
-        )
-        q.processAllAvailable()
-        global _LAST_PROGRESS
-        _LAST_PROGRESS = [json.loads(p.json) for p in q.recentProgress]
-        q.stop()
-        q.awaitTermination()
+        with _tmp_checkpoint("ckpt_") as checkpoint:
+            q = start_stateful(
+                spark,
+                streaming_df.writeStream.format("memory")
+                .queryName(name)
+                .outputMode(output_mode)
+                .option("checkpointLocation", checkpoint),
+            )
+            q.processAllAvailable()
+            global _LAST_PROGRESS
+            _LAST_PROGRESS = [json.loads(p.json) for p in q.recentProgress]
+            q.stop()
+            q.awaitTermination()
     finally:
         if prev_cap is None:
             spark.conf.unset(_CAP)
@@ -707,12 +709,18 @@ def cms_cells_job(events: DataFrame, d: int = 4, w: int = 512) -> DataFrame:
     )
 
 
-def _tmp_checkpoint(prefix: str) -> str:
+@contextlib.contextmanager
+def _tmp_checkpoint(prefix: str) -> Iterator[str]:
     """Ephemeral checkpoint dir for replay/test drives (tmpfs-backed when
-    available to skip per-micro-batch fsync latency). Production jobs
+    available to skip per-micro-batch fsync latency), removed when the
+    block exits: its query must have stopped by then. Production jobs
     pass their own durable checkpointLocation."""
     ckpt_base = "/dev/shm" if os.path.isdir("/dev/shm") else None
-    return tempfile.mkdtemp(prefix=prefix, dir=ckpt_base)
+    path = tempfile.mkdtemp(prefix=prefix, dir=ckpt_base)
+    try:
+        yield path
+    finally:
+        shutil.rmtree(path, ignore_errors=True)
 
 
 def _drain(q) -> None:
@@ -847,14 +855,17 @@ def stream_merge_counter_job(
                     pass
                 os.rename(tmp, marker)  # atomic: marker appears last
 
-    _drain(
-        start_stateful(
-            spark,
-            totals.writeStream.foreachBatch(sink)
-            .outputMode("update")
-            .option(
-                "checkpointLocation",
-                checkpoint or _tmp_checkpoint("ckpt_merge_"),
-            ),
+    # a caller's checkpoint is theirs to keep; only the ephemeral one goes
+    with (
+        contextlib.nullcontext(checkpoint)
+        if checkpoint is not None
+        else _tmp_checkpoint("ckpt_merge_")
+    ) as ckpt:
+        _drain(
+            start_stateful(
+                spark,
+                totals.writeStream.foreachBatch(sink)
+                .outputMode("update")
+                .option("checkpointLocation", ckpt),
+            )
         )
-    )
