@@ -386,3 +386,33 @@ def test_ephemeral_checkpoints_are_removed(spark, replay_stream):
     finally:
         app.stop()
     assert checkpoints() == before
+
+
+def test_scrape_stream_and_store_bench_leave_tmpdir_unchanged(spark):
+    """A scheduled_scrape_stream started without a checkpoint_dir and
+    stopped, and a small measure_store_to_serving, add no entry to
+    TMPDIR."""
+    import os
+    import tempfile
+
+    from transitdata_monitor_data_collector_spark.sources.gtfsrt import (
+        encode_feed_message,
+        scheduled_scrape_stream,
+    )
+    from transitdata_monitor_data_collector_spark.streaming.ingest_bench import (
+        measure_store_to_serving,
+    )
+
+    tmp = tempfile.gettempdir()
+    before = set(os.listdir(tmp))
+    q = scheduled_scrape_stream(
+        spark,
+        ["https://a/feed"],
+        lambda url: (200, encode_feed_message("2.0", 0, ["e"])),
+        poll_interval="1 seconds",
+    )
+    q.stop()
+    assert not q.isActive
+    out = measure_store_to_serving(spark, n_msgs=2_000, rows_per_batch=1_000)
+    assert out["conserved"], out
+    assert sorted(set(os.listdir(tmp)) - before) == []

@@ -23,18 +23,18 @@ def test_readiness_no_queries_is_503():
     assert not h.ok and h.http_status == 503
 
 
-def _start_query(spark):
+def _start_query(spark, ckpt):
     stream = spark.readStream.format("rate").option("rowsPerSecond", "5").load()
     return (
         stream.writeStream.format("memory")
         .queryName(f"health_probe_{tempfile.mktemp(dir='').split('/')[-1]}")
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_health_"))
+        .option("checkpointLocation", str(ckpt))
         .start()
     )
 
 
-def test_readiness_flips_after_progress(spark):
-    q = _start_query(spark)
+def test_readiness_flips_after_progress(spark, tmp_path):
+    q = _start_query(spark, tmp_path)
     try:
         # immediately after start there may be no committed batch yet
         q.processAllAvailable()
@@ -47,8 +47,8 @@ def test_readiness_flips_after_progress(spark):
         q.stop()
 
 
-def test_readiness_after_stop_is_503(spark):
-    q = _start_query(spark)
+def test_readiness_after_stop_is_503(spark, tmp_path):
+    q = _start_query(spark, tmp_path)
     q.processAllAvailable()
     q.stop()
     h = readiness([q])

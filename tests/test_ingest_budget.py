@@ -135,18 +135,18 @@ def test_replay_ingest_floor(spark):
     )
 
 
-def test_replay_read_partitions_split(spark):
+def test_replay_read_partitions_split(spark, tmp_path):
     """readPartitions splits a micro-batch's row range into parallel read
     tasks without changing the delivered rows."""
     import json as _json
-    import tempfile
 
     from transitdata_monitor_data_collector_spark.sources.mqtt import (
         _ReplayPartition,
         _ReplayReader,
     )
 
-    with tempfile.NamedTemporaryFile("w", suffix=".jsonl", delete=False) as f:
+    path = str(tmp_path / "replay.jsonl")
+    with open(path, "w") as f:
         for i in range(10):
             f.write(
                 _json.dumps(
@@ -155,7 +155,6 @@ def test_replay_read_partitions_split(spark):
                 )
                 + "\n"
             )
-        path = f.name
     rdr = _ReplayReader({"path": path, "rowsPerBatch": "10", "readPartitions": "4"})
     parts = rdr.partitions({"row": 0}, {"row": 10})
     assert len(parts) == 4  # ceil(10/ceil(10/4)) = 4 chunks of <=3

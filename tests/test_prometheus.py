@@ -164,3 +164,36 @@ def test_runtime_metrics_served_over_http(spark):
         srv.close()
     assert "jvm_memory_used_bytes" in body
     assert "spark_active_jobs" in body
+
+
+def test_runtime_renders_codegen_compilations(spark):
+    """``spark_codegen_compilations_total`` is a counter that stays put
+    while a query whose generated classes are cached runs again: a fresh
+    build of the same plan generates the same source, a cache hit."""
+    from transitdata_monitor_data_collector_spark.sinks.prometheus import (
+        render_runtime,
+    )
+
+    def compilations() -> float:
+        text = render_runtime(spark, [])
+        assert "# TYPE spark_codegen_compilations_total counter" in text
+        (line,) = [
+            ln for ln in text.splitlines()
+            if ln.startswith("spark_codegen_compilations_total ")
+        ]
+        return float(line.split()[1])
+
+    def run() -> list:
+        return (
+            spark.range(1000)
+            .selectExpr("id % 7 AS k", "id * 3 AS v")
+            .groupBy("k")
+            .agg({"v": "sum"})
+            .collect()
+        )
+
+    run()
+    before = compilations()
+    assert before >= 1
+    run()
+    assert compilations() == before

@@ -8,7 +8,6 @@ from __future__ import annotations
 import hashlib
 import json
 import os
-import tempfile
 
 import pytest
 
@@ -54,8 +53,8 @@ def _url(topic: str) -> str:
 
 
 @pytest.fixture(scope="module")
-def payload_dir():
-    d = tempfile.mkdtemp(prefix="pulsar_ds_")
+def payload_dir(tmp_path_factory):
+    d = tmp_path_factory.mktemp("pulsar_ds")
     for topic, doc in STATS.items():
         name = hashlib.md5(_url(topic).encode()).hexdigest() + ".json"
         with open(os.path.join(d, name), "w") as f:
@@ -75,7 +74,7 @@ def payload_dir():
             "w",
         ) as f:
             json.dump(topics, f)
-    return d
+    return str(d)
 
 
 def _load(spark, payload_dir, extra=None):

@@ -6,7 +6,6 @@ from __future__ import annotations
 
 import hashlib
 import os
-import tempfile
 
 import pytest
 
@@ -26,8 +25,8 @@ URLS = [
 
 
 @pytest.fixture(scope="module")
-def payload_dir():
-    d = tempfile.mkdtemp(prefix="gtfsrt_ds_")
+def payload_dir(tmp_path_factory):
+    d = tmp_path_factory.mktemp("gtfsrt_ds")
     fixtures = {
         URLS[0]: encode_feed_message(timestamp=1000, entity_ids=["a", "b", "c"]),
         URLS[1]: encode_feed_message(timestamp=900, entity_ids=["x"]),
@@ -36,7 +35,7 @@ def payload_dir():
         name = hashlib.md5(url.encode()).hexdigest() + ".bin"
         with open(os.path.join(d, name), "wb") as f:
             f.write(body)
-    return d
+    return str(d)
 
 
 def _load(spark, payload_dir, extra=None):
@@ -67,9 +66,9 @@ def test_batch_plans_one_partition_per_url(spark, payload_dir):
     assert df.rdd.getNumPartitions() == len(URLS)
 
 
-def test_stream_offsets_are_poll_rounds(spark, payload_dir):
+def test_stream_offsets_are_poll_rounds(spark, payload_dir, tmp_path):
     register(spark)
-    ckpt = tempfile.mkdtemp(prefix="ckpt_ds_")
+    ckpt = str(tmp_path / "ckpt")
     q = (
         spark.readStream.format("gtfsrt_scrape")
         .option("urls", ",".join(URLS[:2]))

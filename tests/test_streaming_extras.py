@@ -800,13 +800,11 @@ def test_windowed_rate_invariant_under_batch_size(spark):
     assert len(coarse) > 0
 
 
-def test_holt_tail_state_invariant_under_batching(spark, sf_dir):
+def test_holt_tail_state_invariant_under_batching(spark, sf_dir, tmp_path):
     """The streaming Holt job's load-bearing claim: its per-key tail
     state merges as top-k-of-union, so the final ring — and therefore
     the forecast — is identical whether the corpus arrives as ONE
     micro-batch or as four file-split batches in arbitrary file order."""
-    import tempfile
-
     from transitdata_monitor_data_collector_spark.streaming import jobs
 
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
@@ -831,7 +829,7 @@ def test_holt_tail_state_invariant_under_batching(spark, sf_dir):
 
     # shuffle rows into 4 files so event time is interleaved ACROSS
     # batches — the worst ordering for a tail-state merge
-    split_dir = tempfile.mkdtemp(prefix="holt_split_")
+    split_dir = str(tmp_path / "holt_split")
     ev.orderBy(F.md5(F.col("event_id").cast("string"))).repartition(
         4
     ).write.mode("overwrite").parquet(split_dir)

@@ -20,6 +20,8 @@ from collections.abc import Mapping, Sequence
 
 from pyspark.sql import DataFrame
 
+from transitdata_monitor_data_collector_spark.session import codegen_compilations
+
 __all__ = [
     "render_counter",
     "render_gauge",
@@ -127,6 +129,10 @@ def render_runtime(spark, queries=None) -> str:
     - JVM heap (used/committed/max) via the driver JVM's ``Runtime``;
     - scheduler load (active jobs/stages, default parallelism) via
       ``statusTracker``;
+    - ``spark_codegen_compilations_total``, the generated classes the JVM
+      has compiled (``session.codegen_compilations``): it rises while
+      queries run plans the code cache no longer holds, so a steady rise
+      under a fixed query set is cache thrash;
     - per-StreamingQuery ``lastProgress`` rates (inputRowsPerSecond,
       processedRowsPerSecond, batchId) and state-store row counts
       (``stateOperators[].numRowsTotal``) — the numbers a capacity
@@ -164,6 +170,12 @@ def render_runtime(spark, queries=None) -> str:
         "spark_default_parallelism", "Scheduler default parallelism",
         [("", spark.sparkContext.defaultParallelism)],
     )
+    lines += [
+        "# HELP spark_codegen_compilations_total Generated classes compiled"
+        " (code cache misses)",
+        "# TYPE spark_codegen_compilations_total counter",
+        f"spark_codegen_compilations_total {_fmt_value(codegen_compilations(spark))}",
+    ]
 
     if queries is None:
         queries = spark.streams.active

@@ -746,9 +746,12 @@ def scheduled_scrape_stream(
     URL and appends SCRAPE_SCHEMA rows to an in-memory table named
     ``queryName`` (readable while running — the serving view).
 
-    Returns the started StreamingQuery; callers own stop(). Poll interval
-    validation (must exceed the client timeout) lives in config.py.
+    Returns the started StreamingQuery; callers own stop(). Without a
+    ``checkpoint_dir`` the query checkpoints to a temp dir that its
+    stop() removes. Poll interval validation (must exceed the client
+    timeout) lives in config.py.
     """
+    import shutil
     import tempfile
     import time as _time
     import uuid
@@ -778,17 +781,23 @@ def scheduled_scrape_stream(
             del results[: len(results) - max_kept]
 
     interval_secs = poll_interval  # spark trigger grammar matches ours
+    ckpt = checkpoint_dir or tempfile.mkdtemp(prefix="ckpt_scrape_")
     q = (
         ticker.writeStream.trigger(processingTime=interval_secs)
-        .option(
-            "checkpointLocation",
-            checkpoint_dir or tempfile.mkdtemp(prefix="ckpt_scrape_"),
-        )
+        .option("checkpointLocation", ckpt)
         .foreachBatch(scrape_batch)
         .queryName(name)
         .start()
     )
     q._scrape_results = results  # test/introspection hook
+    if not checkpoint_dir:
+        stop = q.stop
+
+        def stop_and_remove_checkpoint() -> None:
+            stop()
+            shutil.rmtree(ckpt, ignore_errors=True)
+
+        q.stop = stop_and_remove_checkpoint
     return q
 
 

@@ -18,6 +18,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import tempfile
 import time
 from datetime import datetime, timedelta, timezone
@@ -375,6 +376,7 @@ def measure_store_to_serving(
         }
     finally:
         os.unlink(replay_path)
+        shutil.rmtree(work, ignore_errors=True)
 
 
 def measure_live_multibroker_ingest(
@@ -497,6 +499,7 @@ def measure_live_multibroker_ingest(
         finally:
             q.stop()
     finally:
+        shutil.rmtree(ckpt, ignore_errors=True)
         for b in brokers:
             try:
                 b.__exit__(None, None, None)
@@ -622,3 +625,4 @@ def measure_live_ingest(
             }
         finally:
             q.stop()
+            shutil.rmtree(ckpt, ignore_errors=True)
