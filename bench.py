@@ -7,7 +7,11 @@ ONE JSON line: {"metric", "value", "unit", "queries", "sf"}.
 
 Each query is forced end-to-end through the noop sink (full execution, no
 driver-side collect bottleneck). One warm-up pass on the smallest table
-primes the JVM/codegen so the numbers reflect steady-state plans.
+primes the JVM/codegen so the numbers reflect steady-state plans. Every
+timed entry (the headline set, the ``BENCH_ONLY`` entries and the q1
+canary re-probes) goes through one cold-timing loop, ``_time_cold``.
+``SPARK_GRAFT_BENCH_ONLY=a,b`` times only the named entries (registry or
+bench-only) and skips the streaming measurements.
 """
 
 from __future__ import annotations
@@ -16,6 +20,8 @@ import json
 import os
 import sys
 import time
+from collections.abc import Callable
+from functools import reduce
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -227,6 +233,96 @@ def _assert_cold(spark, name: str) -> None:
         jrdd.unpersist()
 
 
+def _time_cold(spark, name: str, run: Callable[[], float]) -> float:
+    """The bench's one timing protocol: an untimed warm-up (JVM codegen
+    compile amortizes), then the min of two cold samples. ``run()`` does
+    the work and returns its own wall time.
+
+    Each sample is structurally cold: drop the warm-up's (or previous
+    sample's) cached plans, then PROVE the state is empty before timing.
+    The first full guarded run exposed that queries caching internally BY
+    DESIGN (the minhash/simhash shingle frames, registered lazily at build
+    time) can never satisfy a no-clearCache EMPTY policy — and had
+    therefore been timed WARM since round 1. Clearing here makes
+    warm-up->timed reuse impossible while intra-run cache reuse (the
+    operator's own design) is billed to the run that builds it. The
+    clear before the warm-up drops what earlier entries leaked: iterative
+    trainers .cache() fixtures and never unpersist, and across a 70-query
+    sweep the leaked blocks pressure the 4g heap and inflate later
+    queries (r5: round-1 set 14.7 s in-sweep vs 12.7 s standalone).
+
+    Min of two: a single sample is hostage to ambient load spikes on a
+    shared machine (BENCH_r02 recorded ~2x uniform inflation vs a clean
+    re-run of the identical build).
+    """
+    print(f"bench: {name}", file=sys.stderr, flush=True)
+    spark.catalog.clearCache()
+    run()
+
+    def sample() -> float:
+        spark.catalog.clearCache()
+        _assert_cold(spark, name)
+        return run()
+
+    return round(min(sample(), sample()), 3)
+
+
+def _noop_write(df) -> None:
+    df.write.format("noop").mode("overwrite").save()
+
+
+def _wide_logreg(spark, sf_dir: str) -> tuple:
+    """The weights-as-DataFrame trainer at a REALISTIC classifier width
+    (2^16 hash buckets vs the gate's 2^10; r6 VERDICT stretch item 8):
+    the per-round cost is joins + aggregates over distributed
+    weight/feature tables with the driver seeing only the corpus count."""
+    from transitdata_monitor_data_collector_spark.plans.llm_data import (
+        _hashed_logreg_run,
+    )
+
+    stats, _w, cached = _hashed_logreg_run(spark, sf_dir, n_buckets=1 << 16)
+    return reduce(lambda a, b: a.unionByName(b), stats), cached
+
+
+def _gk_only(spark, sf_dir: str) -> tuple:
+    """The GK-ONLY percentile serving aggregate (r10 VERDICT item 5): the
+    gated primary embeds the exact twins + rank-window audit (a full
+    per-group sort), so its headline measures the audit, not the sketch.
+    This times the pure 100 TB path: one hash aggregate with fixed-size
+    mergeable GK partials. Correctness is still gated through the
+    primary's raise-on-breach verdicts."""
+    from transitdata_monitor_data_collector_spark.plans.relational import (
+        approx_percentile_gk_serving,
+    )
+
+    return approx_percentile_gk_serving(spark, sf_dir), []
+
+
+#: Bench-only entries, timed after the headline set through the same
+#: loop but outside the gated registry (no oracle slot spent). Each
+#: builds ``(frame, caches)``: the frame is written to the noop sink and
+#: the caches are released before the sample's clock stops.
+BENCH_ONLY = {
+    "doc_quality_logreg_hashed_2e16": _wide_logreg,
+    "agg_approx_percentile_gk_only": _gk_only,
+}
+
+
+def _run_bench_only(spark, sf_dir: str, name: str) -> float:
+    t0 = time.perf_counter()
+    df, cached = BENCH_ONLY[name](spark, sf_dir)
+    try:
+        _noop_write(df)
+    finally:
+        for c in cached:
+            c.unpersist()
+    elapsed = time.perf_counter() - t0
+    # _time_cold clears before every sample, which would mask a cache
+    # this entry failed to release: prove the release here, untimed
+    _assert_cold(spark, name)
+    return elapsed
+
+
 def main() -> None:
     _refresh_registry_index()
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -283,173 +379,72 @@ def main() -> None:
     spark.read.parquet(f"{sf_dir}/region.parquet").count()
 
     def run_once(name: str) -> float:
+        if name in BENCH_ONLY:
+            return _run_bench_only(spark, sf_dir, name)
         # build INSIDE the timer: lazy queries only pay plan construction,
         # but streaming registry entries drive their availableNow run in
         # build() and must be measured end-to-end
         t0 = time.perf_counter()
-        registry[name].build(spark, sf_dir).write.format("noop").mode(
-            "overwrite"
-        ).save()
+        _noop_write(registry[name].build(spark, sf_dir))
         return time.perf_counter() - t0
 
+    def ratio(probe: float | None) -> float | None:
+        return round(probe / canary_ref, 3) if canary_ref and probe is not None else None
+
+    def probe_canary() -> float:
+        return _time_cold(spark, canary_query, lambda: run_once(canary_query))
+
     timings: dict[str, float] = {}
-    for name in (only or HEADLINE):
-        print(f"bench: {name}", file=sys.stderr, flush=True)
-        # Iterative trainers .cache() fixtures and never unpersist; across
-        # a 70-query sweep the leaked blocks pressure the 4g heap and
-        # inflate later queries (r5: round-1 set 14.7 s in-sweep vs 12.7 s
-        # standalone). Dropping caches BETWEEN queries keeps each query's
-        # own warm-up -> timed-run reuse intact.
-        spark.catalog.clearCache()
-        run_once(name)  # untimed warm-up: JVM codegen compile amortizes
-
-        def timed() -> float:
-            # structurally cold: drop the warm-up's (or previous sample's)
-            # cached plans, then PROVE the state is empty before timing.
-            # The first full guarded run exposed that queries caching
-            # internally BY DESIGN (the minhash/simhash shingle frames,
-            # registered lazily at build time) can never satisfy a
-            # no-clearCache EMPTY policy — and had therefore been timed
-            # WARM (reusing the warm-up's materialized cache) since round
-            # 1. Clearing here makes warm-up->timed reuse impossible while
-            # intra-run cache reuse (the operator's own design) is billed
-            # to the run that builds it.
-            spark.catalog.clearCache()
-            _assert_cold(spark, name)
-            return run_once(name)
-
-        # min of two timed runs: a single sample is hostage to ambient
-        # load spikes on a shared machine (BENCH_r02 recorded ~2x uniform
-        # inflation vs a clean re-run of the identical build)
-        timings[name] = round(min(timed(), timed()), 3)
-        if name == canary_query and canary_ref:
-            ratio = round(timings[name] / canary_ref, 3)
-            if ratio > 1.5:
-                print(
-                    f"bench: CONTENTION CANARY HOT — {canary_query} "
-                    f"{timings[name]} s vs committed {canary_ref} s "
-                    f"(x{ratio}); this run is marked contended and its "
-                    "numbers should not be promoted to a baseline",
-                    file=sys.stderr, flush=True,
-                )
-
-    # r6 VERDICT stretch item 8: the weights-as-DataFrame trainer at a
-    # REALISTIC classifier width (2^16 hash buckets vs the gate's 2^10) —
-    # bench-only (no oracle slot spent), demonstrating that the per-round
-    # cost is joins + aggregates over distributed weight/feature tables
-    # with the driver seeing only the corpus count.
-    if not only:
-        from transitdata_monitor_data_collector_spark.plans.llm_data import (
-            _hashed_logreg_run,
-        )
-
-        spark.catalog.clearCache()
-
-        def run_wide_logreg() -> float:
-            # no clearCache here: _assert_cold must SEE (and fail on) any
-            # cache the previous invocation leaked, not mask it
-            _assert_cold(spark, "doc_quality_logreg_hashed_2e16")
-            t0 = time.perf_counter()
-            stats, _w, cached = _hashed_logreg_run(
-                spark, sf_dir, n_buckets=1 << 16
+    for name in only or HEADLINE + list(BENCH_ONLY):
+        timings[name] = _time_cold(spark, name, lambda: run_once(name))
+        if name == canary_query and canary_ref and ratio(timings[name]) > 1.5:
+            print(
+                f"bench: CONTENTION CANARY HOT — {canary_query} "
+                f"{timings[name]} s vs committed {canary_ref} s "
+                f"(x{ratio(timings[name])}); this run is marked contended "
+                "and its numbers should not be promoted to a baseline",
+                file=sys.stderr, flush=True,
             )
-            try:
-                out = stats[0]
-                for s in stats[1:]:
-                    out = out.unionByName(s)
-                out.write.format("noop").mode("overwrite").save()
-            finally:
-                for df in cached:
-                    df.unpersist()
-            return time.perf_counter() - t0
-
-        print("bench: doc_quality_logreg_hashed_2e16", file=sys.stderr,
-              flush=True)
-        run_wide_logreg()  # warm-up
-        timings["doc_quality_logreg_hashed_2e16"] = round(
-            min(run_wide_logreg(), run_wide_logreg()), 3
-        )
-
-        # r10 VERDICT item 5: the GK-ONLY percentile serving aggregate —
-        # the gated primary embeds the exact twins + rank-window audit
-        # (a full per-group sort), so its 4.12 s headline measured the
-        # audit, not the sketch. This bench-only entry times the pure
-        # 100 TB path: one hash aggregate with fixed-size mergeable GK
-        # partials. Correctness is still gated through the primary's
-        # raise-on-breach verdicts; no oracle slot is spent here.
-        from transitdata_monitor_data_collector_spark.plans.relational import (
-            approx_percentile_gk_serving,
-        )
-
-        spark.catalog.clearCache()
-
-        def run_gk_only() -> float:
-            _assert_cold(spark, "agg_approx_percentile_gk_only")
-            t0 = time.perf_counter()
-            approx_percentile_gk_serving(spark, sf_dir).write.format(
-                "noop"
-            ).mode("overwrite").save()
-            return time.perf_counter() - t0
-
-        print("bench: agg_approx_percentile_gk_only", file=sys.stderr,
-              flush=True)
-        run_gk_only()  # warm-up
-        timings["agg_approx_percentile_gk_only"] = round(
-            min(run_gk_only(), run_gk_only()), 3
-        )
 
     # Second canary probe AFTER the sweep (r10): the start-of-run probe
     # cannot see contention (or accumulated JVM pressure) that arrives
     # mid-run — r10's opening bench had a clean 1.07x start canary yet
     # the tail streaming measurements ran 3x slow. Re-time q1 cold here
     # so the streaming numbers that follow carry their own load context.
-    canary_end = None
-    if canary_query in timings:
-        spark.catalog.clearCache()
-        run_once(canary_query)  # warm-up (cold protocol, same as sweep)
-        spark.catalog.clearCache()
-        _assert_cold(spark, canary_query)
-        canary_end = round(min(run_once(canary_query), run_once(canary_query)), 3)
+    canary_end = probe_canary() if canary_query in timings else None
 
-    # Streaming ingest budget (BASELINE.md row 1: >= 10,000 msg/s): replay
-    # 200k synthetic messages through the mqtt-replay DataSource +
-    # windowed_rate_job (fan-out, watermark, stateful window agg, update
-    # sink) and record SUSTAINED throughput + micro-batch latency.
     if only:
         ingest = live = store_serving = multibroker = live_multibroker = None
     else:
         from transitdata_monitor_data_collector_spark.streaming.ingest_bench import (
-            measure_ingest_budget,
-            measure_live_ingest,
-            measure_live_multibroker_ingest,
-            measure_multibroker_ingest,
+            measure_live_fanin,
+            measure_replay_fanin,
             measure_store_to_serving,
         )
 
-        ingest = measure_ingest_budget(spark)
-
-        # Multi-broker fan-in (r8 VERDICT item 5): union N replay sources
-        # (one per broker — the reference runs one listener per broker,
-        # Main.java:76-85) through ONE windowed_rate_job and record total
-        # msg/s vs N. Backs the "34k single-source, ~linear to the budget
-        # x N" scaling claim with measured numbers.
+        # Streaming ingest budget (BASELINE.md row 1: >= 10,000 msg/s):
+        # replay 200k synthetic messages through the mqtt-replay
+        # DataSource + windowed_rate_job (fan-out, watermark, stateful
+        # window agg, update sink) and record SUSTAINED throughput +
+        # micro-batch latency. The multi-broker rows (r8 VERDICT item 5)
+        # union N replay sources, one per broker as the reference runs
+        # one listener per broker (Main.java:76-85), through ONE job.
+        ingest = measure_replay_fanin(spark)
         multibroker = {
-            f"N{n}": measure_multibroker_ingest(
+            f"N{n}": measure_replay_fanin(
                 spark, n_sources=n, n_msgs_per_source=100_000
             )
             for n in (2, 4, 8)
         }
 
-        # Live TCP path (loopback broker -> vendored MQTT client -> source
-        # -> raw append sink): isolates network ingest from the agg path.
-        live = measure_live_ingest(spark, n_msgs=60_000, n_publishers=4)
-
-        # Live N=4 fan-in (r9 VERDICT item 7): four real brokers on
-        # distinct ports, one source each, unioned — the reference's
-        # exact deployment shape (Main.java:76-85), measured on the
-        # actual TCP path rather than the replay source.
-        live_multibroker = measure_live_multibroker_ingest(
-            spark, n_brokers=4, n_msgs_per_broker=40_000
+        # Live TCP path (loopback brokers -> vendored MQTT client ->
+        # source -> raw append sink): isolates network ingest from the
+        # agg path. One broker with four publishers, then the reference's
+        # exact deployment shape (r9 VERDICT item 7): four brokers on
+        # distinct ports, one source each, unioned.
+        live = measure_live_fanin(spark)
+        live_multibroker = measure_live_fanin(
+            spark, n_brokers=4, n_publishers=1, n_msgs_per_broker=40_000
         )
 
         # Full reference-shaped path in one run (r5 VERDICT item 7):
@@ -463,33 +458,19 @@ def main() -> None:
         # (MqttTopicMonitorListener.java:33-36). Record the verdict in
         # the output so a sub-budget reading is loud, and attributable
         # against the post-streaming canary probe below.
-        if store_serving:
-            store_serving["floor_msgs_per_sec"] = 10_000
-            store_serving["floor_ok"] = (
-                store_serving["msgs_per_sec"] >= 10_000
-            )
+        store_serving["floor_msgs_per_sec"] = 10_000
+        store_serving["floor_ok"] = store_serving["msgs_per_sec"] >= 10_000
 
     # Third canary probe AFTER the streaming tail (r10 VERDICT item 1):
     # both earlier probes run BEFORE the ~3-minute streaming section, so
     # a box going bad during it was invisible — r9 AND r10 each published
     # a 3x-misread store_serving number as "contended": false. q1 cold
     # here gives the streaming measurements trailing load context.
-    canary_post = None
-    if not only and canary_query in timings:
-        spark.catalog.clearCache()
-        run_once(canary_query)  # warm-up (cold protocol, same as sweep)
-        spark.catalog.clearCache()
-        _assert_cold(spark, canary_query)
-        canary_post = round(
-            min(run_once(canary_query), run_once(canary_query)), 3
-        )
+    canary_post = (
+        probe_canary() if not only and canary_query in timings else None
+    )
 
     canary_run = timings.get(canary_query)
-    canary_ratio = (
-        round(canary_run / canary_ref, 3)
-        if canary_ref and canary_run is not None
-        else None
-    )
     payload = {
         "metric": "headline_total_sec",
         "value": round(sum(timings.values()), 3),
@@ -502,21 +483,13 @@ def main() -> None:
             "query": canary_query,
             "ref_sec": canary_ref,
             "run_sec": canary_run,
-            "ratio": canary_ratio,
+            "ratio": ratio(canary_run),
             "end_run_sec": canary_end,
-            "end_ratio": (
-                round(canary_end / canary_ref, 3)
-                if canary_ref and canary_end is not None
-                else None
-            ),
+            "end_ratio": ratio(canary_end),
             # r10 VERDICT item 1: q1 re-timed AFTER the streaming tail so
             # store_serving/live fan-in carry trailing load context
             "post_streaming_run_sec": canary_post,
-            "post_streaming_ratio": (
-                round(canary_post / canary_ref, 3)
-                if canary_ref and canary_post is not None
-                else None
-            ),
+            "post_streaming_ratio": ratio(canary_post),
             # divert threshold stays 1.5x (catastrophic contention); ANY
             # of the three probes firing marks the whole run contended
             "contended": bool(

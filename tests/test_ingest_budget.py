@@ -84,23 +84,32 @@ def test_streaming_replay_meets_ingest_budget(spark, oracle_sf_dir):
 
 
 def test_measure_ingest_budget_harness(spark):
-    """The bench's ingest measurement end-to-end at toy scale: real
+    """The bench's replay measurement end-to-end at toy scale, for one
+    source (the single-broker row) and for two unioned sources: real
     mqtt-replay DataSource, real windowed_rate_job, update-mode sink.
     Asserts structure + watermark progression, not the 10k budget (that
-    is bench.py's job at full size)."""
+    is bench.py's job at full size); message conservation is asserted
+    inside the measurement."""
     from transitdata_monitor_data_collector_spark.streaming.ingest_bench import (
-        measure_ingest_budget,
+        measure_replay_fanin,
     )
 
-    r = measure_ingest_budget(
-        spark, n_msgs=4_000, rows_per_batch=1_000, read_partitions=4, warmup=False
-    )
-    assert r["n_msgs"] == 4_000
-    assert r["n_batches"] >= 3  # genuinely multi-batch
-    assert r["n_out_rows"] > 0  # update mode emits every batch
-    assert r["msgs_per_sec"] > 0 and r["max_batch_ms"] > 0
-    # 4000 msgs at 10 kHz event rate = 0.4 s span; watermark = tail - 2 min
-    assert r["final_watermark"].startswith("2024-04-30T23:58:0")
+    for n_sources in (1, 2):
+        r = measure_replay_fanin(
+            spark,
+            n_sources=n_sources,
+            n_msgs_per_source=4_000,
+            rows_per_batch=1_000,
+            read_partitions=4,
+            warmup=False,
+        )
+        assert r["n_sources"] == n_sources
+        assert r["n_msgs"] == 4_000 * n_sources
+        assert r["n_batches"] >= 3  # genuinely multi-batch
+        assert r["n_out_rows"] > 0  # update mode emits every batch
+        assert r["msgs_per_sec"] > 0 and r["max_batch_ms"] > 0
+        # 4000 msgs at 10 kHz event rate = 0.4 s span; watermark = tail - 2 min
+        assert r["final_watermark"].startswith("2024-04-30T23:58:0")
 
 
 @pytest.mark.throughput_floor
@@ -111,13 +120,15 @@ def test_replay_ingest_floor(spark):
     half the measured steady state, 1.5x the reference's 10k budget — so
     a trip means a real regression, not test-box noise."""
     from transitdata_monitor_data_collector_spark.streaming.ingest_bench import (
-        measure_ingest_budget,
+        measure_replay_fanin,
     )
 
     best = 0.0
     samples: list[float] = []
     for _ in range(3):  # best-of-3: wall-clock floors must survive a busy box
-        r = measure_ingest_budget(spark)  # bench-shape defaults: 200k msgs
+        # bench-shape defaults: one source, 200k msgs; a lost message
+        # fails the measurement's conservation check
+        r = measure_replay_fanin(spark)
         samples.append(r["msgs_per_sec"])
         best = max(best, samples[-1])
         if best >= 15_000:
@@ -178,7 +189,7 @@ def test_multibroker_fanin_floor(spark):
     sources, which would drop the union BELOW one source's throughput.
     Message conservation is asserted inside the measurement itself."""
     from transitdata_monitor_data_collector_spark.streaming.ingest_bench import (
-        measure_multibroker_ingest,
+        measure_replay_fanin,
     )
 
     # r10 VERDICT item 6: the 18k floor sits inside same-box noise (a
@@ -189,9 +200,7 @@ def test_multibroker_fanin_floor(spark):
     best = 0.0
     samples: list[float] = []
     for _ in range(5):
-        r = measure_multibroker_ingest(
-            spark, n_sources=4, n_msgs_per_source=50_000
-        )
+        r = measure_replay_fanin(spark, n_sources=4, n_msgs_per_source=50_000)
         samples.append(r["msgs_per_sec"])
         best = max(best, samples[-1])
         if best >= 18_000:

@@ -359,10 +359,13 @@ def test_measure_live_ingest_toy_scale(spark):
     broker -> format('mqtt') source -> memory sink. Structure only; the
     10k msg/s budget is bench.py's job at full size."""
     from transitdata_monitor_data_collector_spark.streaming.ingest_bench import (
-        measure_live_ingest,
+        measure_live_fanin,
     )
 
-    r = measure_live_ingest(spark, n_msgs=2_000, n_publishers=2, timeout_sec=90.0)
+    r = measure_live_fanin(
+        spark, n_msgs_per_broker=2_000, n_publishers=2, timeout_sec=90.0
+    )
+    assert r["n_brokers"] == 1
     assert r["n_msgs"] == 2_000
     assert r["delivered"] == 2_000  # QoS-0 over loopback: nothing dropped
     assert r["msgs_per_sec"] > 0
@@ -399,12 +402,13 @@ def test_measure_live_multibroker_ingest_toy_scale(spark):
     source each, unioned into one stream. Structure + conservation only;
     the msg/s floor is bench.py's job at full size."""
     from transitdata_monitor_data_collector_spark.streaming.ingest_bench import (
-        measure_live_multibroker_ingest,
+        measure_live_fanin,
     )
 
-    r = measure_live_multibroker_ingest(
+    r = measure_live_fanin(
         spark,
         n_brokers=4,
+        n_publishers=1,
         n_msgs_per_broker=500,
         warmup=200,
         timeout_sec=90.0,
@@ -413,3 +417,53 @@ def test_measure_live_multibroker_ingest_toy_scale(spark):
     assert r["n_msgs"] == 2_000
     assert r["delivered"] == 2_000  # QoS-0 over loopback: nothing dropped
     assert r["msgs_per_sec"] > 0
+
+
+class _NoBroker:
+    def __init__(self):
+        raise AssertionError("a broker started")
+
+
+def test_live_fanin_rejects_an_uneven_publisher_split(spark, monkeypatch):
+    """10 messages over 4 publishers would drop 2 and report 8: the
+    measurement refuses before any broker starts."""
+    from transitdata_monitor_data_collector_spark.streaming.ingest_bench import (
+        measure_live_fanin,
+    )
+    from transitdata_monitor_data_collector_spark.vendor.mqttshim import broker
+
+    monkeypatch.setattr(broker, "LoopbackBroker", _NoBroker)
+    with pytest.raises(ValueError, match="split evenly"):
+        measure_live_fanin(spark, n_msgs_per_broker=10, n_publishers=4)
+
+
+def test_live_fanin_exits_only_the_brokers_it_entered(spark, monkeypatch):
+    """When the second of three brokers fails to start, the first is shut
+    down and no broker that never started is exited."""
+    from transitdata_monitor_data_collector_spark.streaming.ingest_bench import (
+        measure_live_fanin,
+    )
+    from transitdata_monitor_data_collector_spark.vendor.mqttshim import broker
+
+    log: list[str] = []
+
+    class FlakyBroker:
+        started = 0
+
+        def __init__(self):
+            FlakyBroker.started += 1
+            self.id = FlakyBroker.started
+
+        def __enter__(self):
+            if self.id == 2:
+                raise OSError("port in use")
+            log.append(f"enter {self.id}")
+            return self
+
+        def __exit__(self, *exc):
+            log.append(f"exit {self.id}")
+
+    monkeypatch.setattr(broker, "LoopbackBroker", FlakyBroker)
+    with pytest.raises(OSError, match="port in use"):
+        measure_live_fanin(spark, n_brokers=3, n_msgs_per_broker=8)
+    assert log == ["enter 1", "exit 1"]

@@ -462,12 +462,18 @@ _PQ_IVF_QUERIES = (
 )
 
 
+#: Read-path conf the parquet readers once set on every call; get_spark
+#: pins both, and a read must leave them as they are.
+_READ_CONFS = ("spark.sql.legacy.parquet.nanosAsLong", "spark.sql.session.timeZone")
+
+
 def _width_confs(spark) -> dict[str, str]:
     return {
         k: v
         for k, v in spark.conf.getAll.items()
         if k.startswith("spark.sql.adaptive.")
         or k == "spark.sql.shuffle.partitions"
+        or k in _READ_CONFS
     }
 
 
@@ -476,14 +482,100 @@ def test_registry_builds_leave_width_conf_unchanged(spark, sf_dir):
     conf: AQE reads it at execution time, so a value left behind by one
     build would govern whatever query, stream or serving job runs next.
     q1 is built first and collected last (build A, build B, collect A),
-    so it must run under the conf it was built under."""
+    so it must run under the conf it was built under. The snapshot also
+    holds the read-path conf, and a parquet replay stream is opened too."""
+    from transitdata_monitor_data_collector_spark.streaming.jobs import (
+        read_parquet_stream,
+    )
+
     before = _width_confs(spark)
+    assert all(k in before for k in _READ_CONFS)
     q1 = REGISTRY["q1_pricing_summary"].build(spark, sf_dir)
     for name in _PQ_IVF_QUERIES:
         REGISTRY[name].build(spark, sf_dir)
+    read_parquet_stream(spark, f"{sf_dir}/events.parquet")
     assert _width_confs(spark) == before
     q1.collect()
     assert _width_confs(spark) == before
+
+
+def test_parquet_readers_leave_a_caller_timezone_alone(spark, sf_dir):
+    """Neither parquet reader resets the session timezone, even when it
+    is not the UTC get_spark pins: a read that wrote it would change the
+    clock every later query in the session runs on. Only the lazy plans
+    are built under the foreign zone; nothing executes."""
+    from transitdata_monitor_data_collector_spark.plans import table
+    from transitdata_monitor_data_collector_spark.streaming.jobs import (
+        read_parquet_stream,
+    )
+
+    key = "spark.sql.session.timeZone"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "America/New_York")
+    try:
+        table(spark, sf_dir, "events")
+        read_parquet_stream(spark, f"{sf_dir}/events.parquet")
+        assert spark.conf.get(key) == "America/New_York"
+    finally:
+        spark.conf.set(key, prev)
+
+
+def test_nanos_parquet_truncates_to_micros(spark, tmp_path):
+    """A parquet TIMESTAMP(NANOS) column, which no committed fixture has,
+    reads through table() and read_parquet_stream truncated to micros,
+    beside a naive-micros column read as UTC, with session conf unchanged."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from transitdata_monitor_data_collector_spark.plans import table
+    from transitdata_monitor_data_collector_spark.streaming.jobs import (
+        read_parquet_stream,
+    )
+
+    nanos = [1_714_521_600_123_456_789, 1_714_521_601_000_000_999, 999]
+    micros = [1_714_521_600_000_001, 0, 1_000_000]
+    (tmp_path / "nanos.parquet").mkdir()
+    pq.write_table(
+        pa.table(
+            {
+                "id": pa.array([0, 1, 2], pa.int64()),
+                "ts_ns": pa.array(nanos, pa.timestamp("ns")),
+                "ts_us": pa.array(micros, pa.timestamp("us")),
+            }
+        ),
+        str(tmp_path / "nanos.parquet" / "part-0.parquet"),
+        version="2.6",
+    )
+    expected = [(i, n // 1000, u) for i, (n, u) in enumerate(zip(nanos, micros))]
+
+    def epoch_micros(df) -> list[tuple]:
+        assert dict(df.dtypes)["ts_ns"] == "timestamp"
+        assert dict(df.dtypes)["ts_us"] == "timestamp"
+        return sorted(
+            tuple(r)
+            for r in df.selectExpr(
+                "id", "unix_micros(ts_ns)", "unix_micros(ts_us)"
+            ).collect()
+        )
+
+    before = spark.conf.getAll
+    assert epoch_micros(table(spark, str(tmp_path), "nanos")) == expected
+
+    # a directory named *.parquet: streamed in place, probed through a member
+    stream = read_parquet_stream(spark, str(tmp_path / "nanos.parquet"))
+    q = (
+        stream.writeStream.format("memory")
+        .queryName("nanos_replay")
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    try:
+        q.awaitTermination()
+    finally:
+        q.stop()
+    assert epoch_micros(spark.table("nanos_replay")) == expected
+    assert spark.conf.getAll == before
 
 
 def test_runtime_bloom_filter_injects_on_selective_shuffle_join(spark, sf_dir):

@@ -176,25 +176,27 @@ def _nano_ts_cols(path: str) -> list[str]:
     return _NANO_COLS_CACHE[path]
 
 
-def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+def normalize_timestamps(df: DataFrame, nano_cols: list[str]) -> DataFrame:
+    """The engine's one timestamp normalization for parquet reads (batch
+    and streaming). ``nano_cols`` (from :func:`_nano_ts_cols`) arrive as
+    long nanos — ``get_spark`` pins ``spark.sql.legacy.parquet.nanosAsLong``
+    — and are truncated to micros. Testdata stores naive micros
+    (TIMESTAMP_NTZ), but the engine's event-time semantics (watermarks,
+    windows, epoch math) run on TIMESTAMP_LTZ, so the naive wall clock is
+    read as UTC: the same instant DuckDB's naive reader sees, under the
+    UTC session timezone ``get_spark`` pins. Writes no session conf."""
     from pyspark.sql import functions as F
     from pyspark.sql.types import TimestampNTZType
 
+    fixes = {c: F.timestamp_micros(F.expr(f"`{c}` DIV 1000")) for c in nano_cols}
+    fixes.update(
+        (f.name, F.col(f.name).cast("timestamp"))
+        for f in df.schema.fields
+        if isinstance(f.dataType, TimestampNTZType)
+    )
+    return df.withColumns(fixes) if fixes else df
+
+
+def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     path = f"{sf_dir}/{name}.parquet"
-    nano_cols = _nano_ts_cols(path)
-    if nano_cols:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(path)
-    for c in nano_cols:
-        df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` DIV 1000")))
-    # Testdata stores naive micros (TIMESTAMP_NTZ). The engine's event-time
-    # semantics (watermarks, windows, epoch math) run on TIMESTAMP_LTZ, so
-    # interpret the naive wall clock as UTC — same instant DuckDB's naive
-    # reader sees. Session tz is pinned to UTC so the cast is stable even
-    # under a caller-provided SparkSession.
-    ntz_cols = [f.name for f in df.schema.fields if isinstance(f.dataType, TimestampNTZType)]
-    if ntz_cols:
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
-        for c in ntz_cols:
-            df = df.withColumn(c, F.col(c).cast("timestamp"))
-    return df
+    return normalize_timestamps(spark.read.parquet(path), _nano_ts_cols(path))

@@ -2,8 +2,10 @@
 
 One place to pin the session config the whole engine assumes:
 UTC session timezone (the reference emits ISO-8601 UTC wall-clock times,
-src/mqtt_data_collector.py:229), AQE for runtime re-planning at Spark's
-default coalescing floor, Arrow for any pandas-UDF path.  Shuffle
+src/mqtt_data_collector.py:229), parquet nanos read as long (the parquet
+readers normalize both without touching session conf), AQE for runtime
+re-planning at Spark's default coalescing floor, Arrow for any
+pandas-UDF path.  Shuffle
 partitions default to the local core count — on a real cluster this is
 overridden to ~2-3× total cores (see README).
 
@@ -86,6 +88,10 @@ def get_spark(
         .config("spark.driver.memory", driver_mem)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.session.timeZone", "UTC")
+        # parquet TIMESTAMP(NANOS) columns, which Spark's reader rejects
+        # otherwise, arrive as long nanos; plans.normalize_timestamps
+        # truncates them to micros
+        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -182,6 +188,7 @@ def cluster_conf(
         "spark.sql.adaptive.coalescePartitions.enabled": "true",
         "spark.sql.adaptive.skewJoin.enabled": "true",
         "spark.sql.session.timeZone": "UTC",
+        "spark.sql.legacy.parquet.nanosAsLong": "true",
         "spark.sql.execution.arrow.pyspark.enabled": "true",
         "spark.sql.optimizer.nestedSchemaPruning.enabled": "true",
         "spark.sql.parquet.filterPushdown": "true",

@@ -1,29 +1,40 @@
-"""Streaming ingest-budget measurement (BASELINE.md target table, row 1).
+"""Streaming ingest measurements (BASELINE.md target table, row 1).
 
 The reference's listener sizing assumes a >= 10,000 msg/s sustained ingest
 budget (MqttTopicMonitorListener.java:29-37 MAX_INFLIGHT). This module
-*measures* that budget instead of asserting it by design: a synthetic
-JSON-lines corpus is replayed through the real ``mqtt-replay`` DataSource
-in rate-limited micro-batches, through the real ``windowed_rate_job``
-(wildcard fan-out + watermark + tumbling windows + append sink), and the
-sustained wall-clock rows/s plus per-batch latency and watermark progress
-are reported from ``StreamingQueryProgress``.
+*measures* that budget instead of asserting it by design, with one fan-in
+measurement per source kind. The reference runs one listener per
+configured broker (Main.java:76-85), so its single-broker case is N=1:
 
-This is deliberately the WORST-CASE path for this engine: the Python
-DataSource reader parses JSON rows in Python (Arrow-batched upward), so the
-measured number is a floor — a parquet/live-JVM source only goes up.
+- :func:`measure_replay_fanin`: N synthetic JSON-lines corpora, one real
+  ``mqtt-replay`` DataSource each, unioned and replayed in rate-limited
+  micro-batches through the real ``windowed_rate_job`` (wildcard fan-out +
+  watermark + tumbling windows + update sink). Sustained wall-clock rows/s
+  plus per-batch latency and watermark progress are read from
+  ``StreamingQueryProgress``.
+- :func:`measure_live_fanin`: N loopback brokers, one ``format("mqtt")``
+  source each, unioned into a raw append memory sink and fed by P
+  publishers per broker over real TCP.
+
+The replay path is deliberately the WORST-CASE path for this engine: the
+Python DataSource reader parses JSON rows in Python (Arrow-batched
+upward), so the measured number is a floor — a parquet/live-JVM source
+only goes up.
 """
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import shutil
 import tempfile
+import threading
 import time
 from datetime import datetime, timedelta, timezone
+from functools import reduce
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 #: Replay filters: two wildcard families + one exact topic, exercising the
 #: multi-match fan-out (each message lands in 2-3 buckets).
@@ -46,7 +57,7 @@ def generate_replay_file(
     EVENT time advances at ``event_rate_per_sec`` (so watermark/window
     semantics see a realistic 10 kHz feed), round-robin over brokers and a
     100-vehicle topic fan. ``broker_prefix`` distinguishes per-source
-    corpora in the multi-broker fan-in measurement."""
+    corpora in the fan-in measurement."""
     start = start or datetime(2024, 5, 1, tzinfo=timezone.utc)
     with open(path, "w") as f:
         for i in range(n_msgs):
@@ -60,53 +71,78 @@ def generate_replay_file(
             f.write(json.dumps(rec) + "\n")
 
 
-def measure_ingest_budget(
+def _replay_stream(
+    spark: SparkSession, path: str, rows_per_batch: int, read_partitions: int
+) -> DataFrame:
+    """The ``mqtt-replay`` reader every replay measurement reads through."""
+    return (
+        spark.readStream.format("mqtt-replay")
+        .option("path", path)
+        .option("rowsPerBatch", str(rows_per_batch))
+        .option("readPartitions", str(read_partitions))
+        .load()
+    )
+
+
+def measure_replay_fanin(
     spark: SparkSession,
-    n_msgs: int = 200_000,
+    n_sources: int = 1,
+    n_msgs_per_source: int = 200_000,
     rows_per_batch: int = 25_000,
     read_partitions: int = 8,
-    replay_path: str | None = None,
     warmup: bool = True,
 ) -> dict:
-    """Replay ``n_msgs`` synthetic messages through windowed_rate_job and
-    return measured throughput + latency:
+    """Replay ``n_sources`` independent corpora of ``n_msgs_per_source``
+    messages, each its own ``mqtt-replay`` source with distinct broker
+    ids, UNIONed into ONE windowed_rate_job, and return measured
+    throughput + latency:
 
-    - ``msgs_per_sec``: n_msgs / wall-clock of the full multi-batch run
-      (source read + fan-out + stateful window agg + sink commit);
+    - ``msgs_per_sec``: total messages / wall-clock of the full
+      multi-batch run (source read + fan-out + stateful window agg + sink
+      commit);
     - ``n_batches``, ``mean_batch_ms``, ``max_batch_ms``: micro-batch
       latency from StreamingQueryProgress;
     - ``final_watermark``: watermark at end of replay (bounded lag — it
       must have advanced to corpus tail minus the 2-minute delay).
 
+    Every micro-batch plans one read per source (N x ``read_partitions``
+    read tasks) feeding one shared fan-out + watermark + window
+    aggregate, the fan-in a multi-broker MQTT estate produces. Sources
+    read in parallel and the aggregate is partial-agg'd, so the total
+    should grow with N until cores saturate.
+
     Output mode is ``update`` — the monitor's publish cadence (counters and
     window rates re-emitted every refresh, mqtt_data_collector.py:176-215),
     so every micro-batch pays the full sink path. A small warm-up replay
-    first absorbs codegen + Python-worker startup, which a *sustained*
-    budget should not bill.
-    """
+    first (2 micro-batches of 1,000 rows per source) absorbs codegen +
+    Python-worker startup, which a *sustained* budget should not bill.
+
+    Message conservation is asserted at every N: the sources must deliver
+    exactly ``n_sources * n_msgs_per_source`` input rows
+    (StreamingQueryProgress numInputRows summed over batches)."""
     from transitdata_monitor_data_collector_spark.sources.mqtt import (
         register_sources,
     )
     from transitdata_monitor_data_collector_spark.streaming.jobs import (
+        RECENT_PROGRESS_CAP,
         last_progress,
         run_to_memory,
         windowed_rate_job,
     )
 
     register_sources(spark)
-    owns_file = replay_path is None
-    if owns_file:
-        fd, replay_path = tempfile.mkstemp(suffix=".jsonl", prefix="ingest_bench_")
-        os.close(fd)
-        generate_replay_file(replay_path, n_msgs)
+    work = tempfile.mkdtemp(prefix="ingest_bench_")
 
-    def run(path: str, rpb: int) -> tuple:
-        stream = (
-            spark.readStream.format("mqtt-replay")
-            .option("path", path)
-            .option("rowsPerBatch", str(rpb))
-            .option("readPartitions", str(read_partitions))
-            .load()
+    def corpora(tag: str, n_msgs: int) -> list[str]:
+        paths = [os.path.join(work, f"{tag}{s}.jsonl") for s in range(n_sources)]
+        for s, path in enumerate(paths):
+            generate_replay_file(path, n_msgs, broker_prefix=f"b{s}")
+        return paths
+
+    def run(paths: list[str], rpb: int) -> tuple:
+        stream = reduce(
+            DataFrame.unionByName,
+            [_replay_stream(spark, p, rpb, read_partitions) for p in paths],
         )
         job = windowed_rate_job(stream, BENCH_FILTERS)
         t0 = time.perf_counter()
@@ -115,153 +151,50 @@ def measure_ingest_budget(
         return n_out, time.perf_counter() - t0
 
     try:
+        paths = corpora("src", n_msgs_per_source)
         if warmup:
-            wfd, wpath = tempfile.mkstemp(suffix=".jsonl", prefix="ingest_warm_")
-            os.close(wfd)
-            generate_replay_file(wpath, 2_000)
-            try:
-                run(wpath, 1_000)
-            finally:
-                os.unlink(wpath)
-        n_out, elapsed = run(replay_path, rows_per_batch)
-        progress = last_progress()
-        batch_ms = [
-            p["durationMs"]["triggerExecution"]
-            for p in progress
-            if p.get("numInputRows", 0) > 0 and "triggerExecution" in p.get("durationMs", {})
-        ]
-        watermarks = [
-            p["eventTime"]["watermark"]
-            for p in progress
-            if p.get("eventTime", {}).get("watermark", "1970") > "1971"
-        ]
-        return {
-            "n_msgs": n_msgs,
-            "rows_per_batch": rows_per_batch,
-            "elapsed_sec": round(elapsed, 3),
-            "msgs_per_sec": round(n_msgs / elapsed, 1),
-            "n_out_rows": n_out,
-            "n_batches": len(batch_ms),
-            "mean_batch_ms": round(sum(batch_ms) / len(batch_ms), 1) if batch_ms else None,
-            "max_batch_ms": max(batch_ms) if batch_ms else None,
-            "final_watermark": max(watermarks) if watermarks else None,
-        }
+            run(corpora("warm", 2_000), 1_000)
+        n_out, elapsed = run(paths, rows_per_batch)
     finally:
-        if owns_file:
-            os.unlink(replay_path)
+        shutil.rmtree(work, ignore_errors=True)
 
-
-def measure_multibroker_ingest(
-    spark: SparkSession,
-    n_sources: int = 4,
-    n_msgs_per_source: int = 100_000,
-    rows_per_batch: int = 25_000,
-    read_partitions: int = 8,
-    warmup: bool = True,
-) -> dict:
-    """Fan-in ``n_sources`` independent replay sources — the reference's
-    one-listener-per-broker deployment shape (Main.java:76-85 starts one
-    MqttTopicMonitor per configured broker) — UNIONed into a single
-    windowed_rate_job, and measure sustained total msg/s.
-
-    Each source is its own ``mqtt-replay`` DataSource instance over its
-    own corpus (distinct broker ids), so every micro-batch plans one read
-    per source (N x ``read_partitions`` read tasks) feeding one shared
-    fan-out + watermark + window aggregate — the fan-in a multi-broker
-    MQTT estate actually produces. The claim under test (r8 VERDICT item
-    5): single-source ingest is ~34k msg/s and the unioned form should
-    hold a per-estate budget ~linear in N until cores saturate, because
-    sources read in parallel and the aggregate is partial-agg'd.
-
-    Message conservation is asserted: the union must deliver exactly
-    ``n_sources * n_msgs_per_source`` input rows (StreamingQueryProgress
-    numInputRows summed over batches)."""
-    from transitdata_monitor_data_collector_spark.sources.mqtt import (
-        register_sources,
-    )
-    from transitdata_monitor_data_collector_spark.streaming.jobs import (
-        last_progress,
-        run_to_memory,
-        windowed_rate_job,
-    )
-
-    register_sources(spark)
-    paths: list[str] = []
-    try:
-        for s in range(n_sources):
-            fd, path = tempfile.mkstemp(
-                suffix=".jsonl", prefix=f"ingest_mb{s}_"
-            )
-            os.close(fd)
-            generate_replay_file(
-                path, n_msgs_per_source, broker_prefix=f"b{s}"
-            )
-            paths.append(path)
-
-        def source(path: str):
-            return (
-                spark.readStream.format("mqtt-replay")
-                .option("path", path)
-                .option("rowsPerBatch", str(rows_per_batch))
-                .option("readPartitions", str(read_partitions))
-                .load()
-            )
-
-        def run(ps: list[str]) -> tuple:
-            stream = source(ps[0])
-            for p in ps[1:]:
-                stream = stream.unionByName(source(p))
-            job = windowed_rate_job(stream, BENCH_FILTERS)
-            t0 = time.perf_counter()
-            out = run_to_memory(spark, job, output_mode="update")
-            n_out = out.count()
-            return n_out, time.perf_counter() - t0
-
-        if warmup:
-            wpaths = []
-            for s in range(n_sources):
-                wfd, wpath = tempfile.mkstemp(
-                    suffix=".jsonl", prefix=f"ingest_mbw{s}_"
-                )
-                os.close(wfd)
-                generate_replay_file(wpath, 1_000, broker_prefix=f"b{s}")
-                wpaths.append(wpath)
-            try:
-                run(wpaths)
-            finally:
-                for p in wpaths:
-                    os.unlink(p)
-
-        n_out, elapsed = run(paths)
-        total = n_sources * n_msgs_per_source
-        progress = last_progress()
-        from transitdata_monitor_data_collector_spark.streaming.jobs import (
-            RECENT_PROGRESS_CAP,
+    total = n_sources * n_msgs_per_source
+    progress = last_progress()
+    if len(progress) >= RECENT_PROGRESS_CAP:
+        # the progress ring buffer wrapped — the sum below would
+        # under-count and report a spurious loss (r9 ADVICE)
+        raise AssertionError(
+            f"replay conservation check invalid: {len(progress)} "
+            f"micro-batches hit the {RECENT_PROGRESS_CAP} progress cap"
         )
-
-        if len(progress) >= RECENT_PROGRESS_CAP:
-            # the progress ring buffer wrapped — the sum below would
-            # under-count and report a spurious loss (r9 ADVICE)
-            raise AssertionError(
-                f"multibroker conservation check invalid: {len(progress)} "
-                f"micro-batches hit the {RECENT_PROGRESS_CAP} progress cap"
-            )
-        in_rows = sum(p.get("numInputRows", 0) for p in progress)
-        if in_rows != total:
-            raise AssertionError(
-                f"multibroker fan-in lost messages: {in_rows} processed "
-                f"of {total} replayed"
-            )
-        return {
-            "n_sources": n_sources,
-            "n_msgs_total": total,
-            "elapsed_sec": round(elapsed, 3),
-            "msgs_per_sec": round(total / elapsed, 1),
-            "n_out_rows": n_out,
-        }
-    finally:
-        for p in paths:
-            os.unlink(p)
+    in_rows = sum(p.get("numInputRows", 0) for p in progress)
+    if in_rows != total:
+        raise AssertionError(
+            f"replay fan-in lost messages: {in_rows} processed of {total} "
+            f"replayed over {n_sources} source(s)"
+        )
+    batch_ms = [
+        p["durationMs"]["triggerExecution"]
+        for p in progress
+        if p.get("numInputRows", 0) > 0 and "triggerExecution" in p.get("durationMs", {})
+    ]
+    watermarks = [
+        p["eventTime"]["watermark"]
+        for p in progress
+        if p.get("eventTime", {}).get("watermark", "1970") > "1971"
+    ]
+    return {
+        "n_sources": n_sources,
+        "n_msgs": total,
+        "rows_per_batch": rows_per_batch,
+        "elapsed_sec": round(elapsed, 3),
+        "msgs_per_sec": round(total / elapsed, 1),
+        "n_out_rows": n_out,
+        "n_batches": len(batch_ms),
+        "mean_batch_ms": round(sum(batch_ms) / len(batch_ms), 1) if batch_ms else None,
+        "max_batch_ms": max(batch_ms) if batch_ms else None,
+        "final_watermark": max(watermarks) if watermarks else None,
+    }
 
 
 def measure_store_to_serving(
@@ -299,20 +232,13 @@ def measure_store_to_serving(
     )
 
     register_sources(spark)
-    fd, replay_path = tempfile.mkstemp(suffix=".jsonl", prefix="store_serve_")
-    os.close(fd)
-    generate_replay_file(replay_path, n_msgs)
     work = tempfile.mkdtemp(prefix="store_serve_")
+    replay_path = os.path.join(work, "replay.jsonl")
     table_path = os.path.join(work, "counter_table")
     history_path = os.path.join(work, "counter_history")
     try:
-        stream = (
-            spark.readStream.format("mqtt-replay")
-            .option("path", replay_path)
-            .option("rowsPerBatch", str(rows_per_batch))
-            .option("readPartitions", str(read_partitions))
-            .load()
-        )
+        generate_replay_file(replay_path, n_msgs)
+        stream = _replay_stream(spark, replay_path, rows_per_batch, read_partitions)
         t0 = time.perf_counter()
         stream_merge_counter_job(
             spark, stream, table_path, BENCH_FILTERS,
@@ -375,28 +301,41 @@ def measure_store_to_serving(
             "conserved": sum(totals.values()) == expected,
         }
     finally:
-        os.unlink(replay_path)
         shutil.rmtree(work, ignore_errors=True)
 
 
-def measure_live_multibroker_ingest(
+def measure_live_fanin(
     spark: SparkSession,
-    n_brokers: int = 4,
-    n_msgs_per_broker: int = 40_000,
+    n_brokers: int = 1,
+    n_publishers: int = 4,
+    n_msgs_per_broker: int = 60_000,
     max_batch_size: int = 10_000,
     timeout_sec: float = 180.0,
     warmup: int = 2_000,
 ) -> dict:
-    """LIVE TCP fan-in across N brokers (r9 VERDICT item 7): one
-    ``format("mqtt")`` source per loopback broker on its own port, all
-    unioned into ONE stream — the exact reference deployment (one
-    listener per configured broker, Main.java:76-85) — driven to a raw
-    append memory sink. Complements :func:`measure_multibroker_ingest`
-    (replay-source fan-in through the stateful window job): here the
-    system under test is N concurrent sockets + N source buffers through
-    one micro-batch planner."""
-    import threading
+    """Measure the LIVE TCP path: ``n_brokers`` loopback brokers on their
+    own ports, one ``format("mqtt")`` source each (the vendored MQTT
+    client inside the source), all unioned into ONE stream and driven to
+    a raw append memory sink — the exact reference deployment, one
+    listener per configured broker (Main.java:76-85). ``n_publishers``
+    concurrent publishers per broker send ``n_msgs_per_broker`` messages
+    in equal shares; a share that does not divide evenly raises
+    ``ValueError`` before any broker starts.
 
+    Complements :func:`measure_replay_fanin` (which replays files through
+    the engine's stateful window job): here the system under test is the
+    network ingest itself — real MQTT framing over N concurrent sockets,
+    the sources' buffer/drain machinery, and one micro-batch planner. The
+    sink is raw append (no aggregation) so the number isolates ingest;
+    the replay measurement owns the agg-path number. ``msgs_per_sec``
+    counts from first publish to the last row visible in the sink.
+
+    A small untimed warmup wave runs through the same stream first
+    (``warmup`` messages per broker on ``bench/w/...``): the first
+    micro-batch pays stream initialization (Python-worker spin-up,
+    codegen) of 2-4 s, which is amortized startup, not ingest rate —
+    exactly the untimed warm-up pass the batch bench gives each query.
+    """
     from transitdata_monitor_data_collector_spark.sources.mqtt import (
         register_sources,
     )
@@ -405,23 +344,47 @@ def measure_live_multibroker_ingest(
         LoopbackBroker,
     )
 
+    if n_msgs_per_broker % n_publishers:
+        raise ValueError(
+            f"n_msgs_per_broker={n_msgs_per_broker} does not split evenly "
+            f"over {n_publishers} publishers"
+        )
+    per_pub = n_msgs_per_broker // n_publishers
+    total = n_brokers * n_msgs_per_broker
     register_sources(spark)
-    name = "live_mb_ingest_bench"
-    ckpt = tempfile.mkdtemp(prefix="live_mb_ingest_ckpt_")
-    brokers = [LoopbackBroker() for _ in range(n_brokers)]
-    try:
-        for b in brokers:
-            b.__enter__()
-        stream = None
-        for b in brokers:
-            src = (
+    name = "live_ingest_bench"
+
+    def publish(port: int, prefix: str, n: int) -> None:
+        c = Client()
+        c.connect("127.0.0.1", port)
+        c.publish_many((f"{prefix}/{i % 100}", b"x" * 64) for i in range(n))
+        c.disconnect()
+
+    def wait_for(prefix: str, n: int) -> int:
+        deadline = time.monotonic() + timeout_sec
+        seen = 0
+        while time.monotonic() < deadline:
+            seen = spark.table(name).filter(f"topic LIKE '{prefix}/%'").count()
+            if seen >= n:
+                break
+            time.sleep(0.1)
+        return seen
+
+    with contextlib.ExitStack() as stack:
+        brokers = [stack.enter_context(LoopbackBroker()) for _ in range(n_brokers)]
+        ckpt = tempfile.mkdtemp(prefix="live_ingest_ckpt_")
+        stack.callback(shutil.rmtree, ckpt, ignore_errors=True)
+        stream = reduce(
+            DataFrame.unionByName,
+            [
                 spark.readStream.format("mqtt")
                 .option("broker", f"tcp://127.0.0.1:{b.port}")
                 .option("topicFilters", "bench/#")
                 .option("maxBatchSize", str(max_batch_size))
                 .load()
-            )
-            stream = src if stream is None else stream.unionByName(src)
+                for b in brokers
+            ],
+        )
         q = (
             stream.writeStream.format("memory")
             .queryName(name)
@@ -430,199 +393,38 @@ def measure_live_multibroker_ingest(
             .trigger(processingTime="100 milliseconds")
             .start()
         )
-        try:
-            for b in brokers:
-                if not b.wait_for_subscription("bench/#", timeout=60.0):
-                    raise TimeoutError(
-                        f"live source never subscribed on port {b.port}"
-                    )
-
-            def sink_count(prefix: str) -> int:
-                return (
-                    spark.table(name)
-                    .filter(f"topic LIKE '{prefix}%'")
-                    .count()
-                )
-
-            if warmup:
-                for b in brokers:
-                    c = Client()
-                    c.connect("127.0.0.1", b.port)
-                    c.publish_many(
-                        (f"bench/w/{i % 100}", b"x" * 64)
-                        for i in range(warmup)
-                    )
-                    c.disconnect()
-                deadline = time.monotonic() + timeout_sec
-                while time.monotonic() < deadline:
-                    if sink_count("bench/w/") >= warmup * n_brokers:
-                        break
-                    time.sleep(0.1)
-
-            def publish(k: int) -> None:
-                c = Client()
-                c.connect("127.0.0.1", brokers[k].port)
-                c.publish_many(
-                    (f"bench/m/{k}/{i % 100}", b"x" * 64)
-                    for i in range(n_msgs_per_broker)
-                )
-                c.disconnect()
-
-            t0 = time.perf_counter()
-            threads = [
-                threading.Thread(target=publish, args=(k,))
-                for k in range(n_brokers)
-            ]
-            for t in threads:
-                t.start()
-            for t in threads:
-                t.join()
-            t_pub = time.perf_counter() - t0
-
-            total = n_brokers * n_msgs_per_broker
-            deadline = time.monotonic() + timeout_sec
-            seen = 0
-            while time.monotonic() < deadline:
-                seen = sink_count("bench/m/")
-                if seen >= total:
-                    break
-                time.sleep(0.1)
-            elapsed = time.perf_counter() - t0
-            return {
-                "n_brokers": n_brokers,
-                "n_msgs": total,
-                "delivered": seen,
-                "publish_sec": round(t_pub, 3),
-                "end_to_end_sec": round(elapsed, 3),
-                "msgs_per_sec": round(seen / elapsed, 1) if elapsed else None,
-            }
-        finally:
-            q.stop()
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
+        stack.callback(q.stop)
         for b in brokers:
-            try:
-                b.__exit__(None, None, None)
-            except Exception:
-                pass
+            if not b.wait_for_subscription("bench/#", timeout=60.0):
+                raise TimeoutError(f"live source never subscribed on port {b.port}")
 
+        if warmup:
+            for b in brokers:
+                publish(b.port, "bench/w", warmup)
+            wait_for("bench/w", warmup * n_brokers)
 
-def measure_live_ingest(
-    spark: SparkSession,
-    n_msgs: int = 30_000,
-    n_publishers: int = 4,
-    max_batch_size: int = 10_000,
-    timeout_sec: float = 120.0,
-    warmup: int = 2_000,
-) -> dict:
-    """Measure the LIVE TCP path: loopback broker -> vendored MQTT client
-    inside the ``format("mqtt")`` source -> memory sink.
-
-    Complements :func:`measure_ingest_budget` (which replays files through
-    the engine's stateful window job): here the system under test is the
-    network ingest itself — real MQTT framing over a socket, the
-    source's buffer/drain machinery, and micro-batch planning. The sink is
-    raw append (no aggregation) so the number isolates ingest; the replay
-    bench owns the agg-path number. ``msgs_per_sec`` counts from first
-    publish to the last row visible in the sink.
-
-    A small untimed warmup wave runs through the same stream first
-    (``warmup`` messages on ``bench/w/...``): the first micro-batch pays
-    stream initialization (Python-worker spin-up, codegen) of 2-4 s,
-    which is amortized startup, not ingest rate — exactly the untimed
-    warm-up pass the batch bench gives each query.
-    """
-    import threading
-
-    from transitdata_monitor_data_collector_spark.sources.mqtt import (
-        register_sources,
-    )
-    from transitdata_monitor_data_collector_spark.vendor.mqttshim import Client
-    from transitdata_monitor_data_collector_spark.vendor.mqttshim.broker import (
-        LoopbackBroker,
-    )
-
-    register_sources(spark)
-    name = "live_ingest_bench"
-    ckpt = tempfile.mkdtemp(prefix="live_ingest_ckpt_")
-    with LoopbackBroker() as broker:
-        stream = (
-            spark.readStream.format("mqtt")
-            .option("broker", f"tcp://127.0.0.1:{broker.port}")
-            .option("topicFilters", "bench/#")
-            .option("maxBatchSize", str(max_batch_size))
-            .load()
-        )
-        q = (
-            stream.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(processingTime="100 milliseconds")
-            .start()
-        )
-        try:
-            if not broker.wait_for_subscription("bench/#", timeout=60.0):
-                raise TimeoutError("live source never subscribed")
-
-            def sink_count(prefix: str) -> int:
-                return (
-                    spark.table(name)
-                    .filter(f"topic LIKE '{prefix}%'")
-                    .count()
-                )
-
-            if warmup:
-                c = Client()
-                c.connect("127.0.0.1", broker.port)
-                c.publish_many(
-                    (f"bench/w/{i % 100}", b"x" * 64) for i in range(warmup)
-                )
-                c.disconnect()
-                deadline = time.monotonic() + timeout_sec
-                while time.monotonic() < deadline:
-                    if sink_count("bench/w/") >= warmup:
-                        break
-                    time.sleep(0.1)
-
-            per_pub = n_msgs // n_publishers
-
-            def publish(k: int) -> None:
-                c = Client()
-                c.connect("127.0.0.1", broker.port)
-                c.publish_many(
-                    (f"bench/m/{k}/{i % 100}", b"x" * 64)
-                    for i in range(per_pub)
-                )
-                c.disconnect()
-
-            t0 = time.perf_counter()
-            threads = [
-                threading.Thread(target=publish, args=(k,))
-                for k in range(n_publishers)
-            ]
-            for t in threads:
-                t.start()
-            for t in threads:
-                t.join()
-            t_pub = time.perf_counter() - t0
-
-            total = n_publishers * per_pub
-            deadline = time.monotonic() + timeout_sec
-            seen = 0
-            while time.monotonic() < deadline:
-                seen = sink_count("bench/m/")
-                if seen >= total:
-                    break
-                time.sleep(0.1)
-            elapsed = time.perf_counter() - t0
-            return {
-                "n_msgs": total,
-                "delivered": seen,
-                "publish_sec": round(t_pub, 3),
-                "end_to_end_sec": round(elapsed, 3),
-                "msgs_per_sec": round(seen / elapsed, 1) if elapsed else None,
-            }
-        finally:
-            q.stop()
-            shutil.rmtree(ckpt, ignore_errors=True)
+        t0 = time.perf_counter()
+        threads = [
+            threading.Thread(
+                target=publish,
+                args=(b.port, f"bench/m/{i * n_publishers + k}", per_pub),
+            )
+            for i, b in enumerate(brokers)
+            for k in range(n_publishers)
+        ]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join()
+        t_pub = time.perf_counter() - t0
+        seen = wait_for("bench/m", total)
+        elapsed = time.perf_counter() - t0
+        return {
+            "n_brokers": n_brokers,
+            "n_publishers": n_publishers,
+            "n_msgs": total,
+            "delivered": seen,
+            "publish_sec": round(t_pub, 3),
+            "end_to_end_sec": round(elapsed, 3),
+            "msgs_per_sec": round(seen / elapsed, 1),
+        }

@@ -329,9 +329,8 @@ def read_parquet_stream(
     spark: SparkSession, path: str, max_files_per_trigger: int | None = None
 ) -> DataFrame:
     """File-replay source: stream an existing parquet file/dir with its
-    batch schema (the deterministic stand-in for live MQTT). Nano-precision
-    timestamp columns are read as long and truncated to micros (same
-    handling as plans.table).
+    batch schema (the deterministic stand-in for live MQTT). Timestamps are
+    normalized as in plans.table (``plans.normalize_timestamps``).
 
     ``SPARK_GRAFT_REPLAY_MAX_FILES`` (env) supplies a default
     ``maxFilesPerTrigger`` when the caller passes none — the
@@ -357,11 +356,12 @@ def read_parquet_stream(
             )
             max_files_per_trigger = int(env_mft)
 
-    from transitdata_monitor_data_collector_spark.plans import _nano_ts_cols
+    from transitdata_monitor_data_collector_spark.plans import (
+        _nano_ts_cols,
+        normalize_timestamps,
+    )
 
     nano_cols = _nano_ts_cols(path) if path.endswith(".parquet") else []
-    if nano_cols:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     schema = spark.read.parquet(path).schema
     if os.path.isfile(path):
         # The file streaming source requires a directory; expose a single
@@ -400,19 +400,8 @@ def read_parquet_stream(
     reader = spark.readStream.schema(schema)
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    df = reader.parquet(path)
-    for c in nano_cols:
-        df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` DIV 1000")))
-    # Naive-micros (TIMESTAMP_NTZ) columns can't carry a watermark; interpret
-    # the wall clock as UTC TIMESTAMP_LTZ (same normalization as plans.table).
-    from pyspark.sql.types import TimestampNTZType
-
-    ntz_cols = [f.name for f in df.schema.fields if isinstance(f.dataType, TimestampNTZType)]
-    if ntz_cols:
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
-        for c in ntz_cols:
-            df = df.withColumn(c, F.col(c).cast("timestamp"))
-    return df
+    # naive-micros (TIMESTAMP_NTZ) columns can't carry a watermark
+    return normalize_timestamps(reader.parquet(path), nano_cols)
 
 
 def _duration_seconds(s: str) -> int:
